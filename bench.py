@@ -136,7 +136,7 @@ def main() -> None:
         # measured at sf0.1: the degree-oriented two-join evaluates
         # ~25% faster with AQE off (fixed-shape plan, interleaved
         # warm A/B: off [1.30, 0.99, 0.95] vs on [1.84, 1.34, 1.09]s)
-        from graphscope_spark.plans.adaptive import superstep_conf
+        from graphscope_spark.plans.superstep import superstep_conf
 
         with superstep_conf(spark, False):
             triangles(g).agg(F.sum("tricnt")).collect()
@@ -197,7 +197,7 @@ def main() -> None:
         CDLP_BIG_ROUNDS, CDLP_REPORT_ROUNDS = 5, 10
 
         def _big_tri():
-            from graphscope_spark.plans.adaptive import superstep_conf
+            from graphscope_spark.plans.superstep import superstep_conf
 
             with superstep_conf(spark, False):
                 triangles(gb).agg(F.sum("tricnt")).collect()

@@ -372,7 +372,7 @@ class Traversal:
         graphs (GIE's default expand direction), the symmetrized set
         for undirected — override with ``symmetrize``."""
         from .operators.traversal import bfs
-        from .plans.checkpoint import maybe_truncate_lineage
+        from .plans.superstep import LineageCuts
 
         assert self._kind == "v", "shortestPath starts from vertices"
         rows = self._df.select("id").distinct().limit(2).collect()
@@ -415,23 +415,24 @@ class Traversal:
                 [([int(target)], int(target))], "path array<long>, head long"
             )
             done = state.where(F.col("head") == src).select("path")
-            for i in range(dmax):
-                state = (
-                    state.where(F.col("head") != src)
-                    .join(preds_all.withColumnRenamed("id", "head"), "head")
-                    .select(
-                        F.concat(F.array(F.col("pred")), F.col("path"))
-                        .alias("path"),
-                        F.col("pred").alias("head"),
+            with LineageCuts(spark, "gie_paths") as cuts:
+                for i in range(dmax):
+                    state = (
+                        state.where(F.col("head") != src)
+                        .join(preds_all.withColumnRenamed("id", "head"), "head")
+                        .select(
+                            F.concat(F.array(F.col("pred")), F.col("path"))
+                            .alias("path"),
+                            F.col("pred").alias("head"),
+                        )
                     )
-                )
-                state = maybe_truncate_lineage(state, i, 3)
-                done = done.unionByName(
-                    state.where(F.col("head") == src).select("path")
-                )
-            return done.select(
-                "path", (F.size("path") - 1).cast("int").alias("hops")
-            )
+                    state = cuts.maybe(state, i)
+                    done = done.unionByName(
+                        state.where(F.col("head") == src).select("path")
+                    )
+                return cuts.keep(done.select(
+                    "path", (F.size("path") - 1).cast("int").alias("hops")
+                ))
         tree = (
             preds_all.groupBy("id").agg(F.min("pred").alias("pred"))
             .localCheckpoint(eager=True)
@@ -440,23 +441,24 @@ class Traversal:
             "id", F.array(F.col("id")).alias("path"),
             F.col("id").alias("head"),
         )
-        for i in range(dmax):
-            state = (
-                state.join(tree.withColumnRenamed("id", "head"),
-                           "head", "left")
-                .select(
-                    "id",
-                    F.when(F.col("pred").isNotNull(),
-                           F.concat(F.array(F.col("pred")), F.col("path")))
-                    .otherwise(F.col("path")).alias("path"),
-                    F.coalesce("pred", "head").alias("head"),
+        with LineageCuts(spark, "gie_paths") as cuts:
+            for i in range(dmax):
+                state = (
+                    state.join(tree.withColumnRenamed("id", "head"),
+                               "head", "left")
+                    .select(
+                        "id",
+                        F.when(F.col("pred").isNotNull(),
+                               F.concat(F.array(F.col("pred")), F.col("path")))
+                        .otherwise(F.col("path")).alias("path"),
+                        F.coalesce("pred", "head").alias("head"),
+                    )
                 )
-            )
-            state = maybe_truncate_lineage(state, i, 3)
-        out = state.join(depth.withColumnRenamed("depth", "hops"), "id")
-        if target is not None:
-            out = out.where(F.col("id") == int(target))
-        return out.select("id", F.col("hops").cast("int"), "path")
+                state = cuts.maybe(state, i)
+            out = state.join(depth.withColumnRenamed("depth", "hops"), "id")
+            if target is not None:
+                out = out.where(F.col("id") == int(target))
+            return cuts.keep(out.select("id", F.col("hops").cast("int"), "path"))
 
     # -------------------------------------------------------- terminals
     def groupCount(self) -> DataFrame:

@@ -25,26 +25,24 @@ the per-group frequency map is built once instead of histogram +
 second argmax pass).  AQE stays ON here — unlike the fixed-shape
 pagerank/wcc supersteps, the label-histogram shuffle shrinks as
 communities converge and AQE's runtime coalesce wins (off measured
-~1.8x slower at sf0.1; see ``plans.adaptive``).
+~1.8x slower at sf0.1; see ``plans.superstep``).
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import Graph
-from graphscope_spark.plans.checkpoint import CheckpointManager, maybe_truncate_lineage
+from graphscope_spark.plans import superstep
+from graphscope_spark.plans.checkpoint import CheckpointManager
 
 
 def cdlp(
     graph: Graph,
     max_round: int = 10,
     checkpoint: CheckpointManager | None = None,
-    lineage_truncate_every: int = 5,
     init_labels: DataFrame | None = None,
 ) -> DataFrame:
     """Returns ``(id long, label long)`` after exactly ``max_round``
@@ -81,12 +79,10 @@ def cdlp(
         msgs_edges = msgs_edges.repartition(graph.num_partitions, "src")
     msgs_edges = msgs_edges.persist(StorageLevel.MEMORY_AND_DISK)
 
-    start_round = 0
-    if checkpoint is not None and (latest := checkpoint.latest_superstep()) is not None:
-        state = checkpoint.load_state(graph.vertices.sparkSession, latest)
-        start_round = latest + 1
-    elif init_labels is not None:
-        state = (
+    def init() -> DataFrame:
+        if init_labels is None:
+            return graph.vertices.select("id", F.col("id").alias("label"))
+        return (
             graph.vertices.select("id")
             .join(
                 init_labels.select("id", F.col("label").alias("l0")),
@@ -94,15 +90,12 @@ def cdlp(
             )
             .select("id", F.coalesce("l0", F.col("id")).alias("label"))
         )
-    else:
-        state = graph.vertices.select("id", F.col("id").alias("label"))
-    state = state.persist(StorageLevel.MEMORY_AND_DISK)
 
     n_part = int(
         graph.vertices.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    for rnd in range(start_round, max_round):
-        t0 = time.time()
+
+    def step(state: DataFrame, rnd: int) -> DataFrame:
         # one exchange per round: pre-partition messages by dst, then a
         # single deterministic-mode aggregation (min label among tied
         # modes = the LDBC tie-break) runs shuffle-free on top of it
@@ -113,20 +106,14 @@ def cdlp(
             .groupBy("id")
             .agg(F.mode("label", True).alias("new_label"))
         )
-        new_state = (
+        return (
             state.withColumnRenamed("label", "old_label")
             .join(winner, "id", "left")
             .select("id", F.coalesce("new_label", F.col("old_label")).alias("label"))
         )
-        new_state = maybe_truncate_lineage(
-            new_state.persist(StorageLevel.MEMORY_AND_DISK), rnd, lineage_truncate_every
-        )
-        new_state.count()  # materialize before dropping parent
-        state.unpersist()
-        state = new_state
-        if checkpoint is not None:
-            checkpoint.save(
-                rnd, state, {"wall_ms": (time.time() - t0) * 1000.0}
-            )
 
+    state = superstep.run(
+        graph.vertices.sparkSession, "cdlp", init, step,
+        superstep.fixed_rounds, max_round, checkpoint=checkpoint,
+    )
     return state.select("id", "label")

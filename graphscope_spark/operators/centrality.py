@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import Graph
+from graphscope_spark.plans import superstep
 
 
 def degree_centrality(graph: Graph, degree_type: str = "both") -> DataFrame:
@@ -63,21 +64,14 @@ def eigenvector_centrality(
     (power iteration; NetworkX/hundred-iteration semantics).  AQE
     stays ON: unlike the frontier loops, the dense |V|-state joins
     here measured ~1.4x FASTER with adaptive planning (A/B at
-    sf0.01, see ``plans.adaptive`` for the policy)."""
-    return _eigenvector_loop(graph, max_iter, tol)
-
-
-def _eigenvector_loop(graph, max_iter, tol):
+    sf0.01, see ``plans.superstep`` for the policy)."""
     edges = graph.edges if graph.directed else graph.symmetrized_edges()
     edges = edges.select("src", "dst").localCheckpoint(eager=True)
     n = graph.vertices.count()
-    state = graph.vertices.select("id", F.lit(1.0 / n).alias("x")).localCheckpoint(
-        eager=True
-    )
-    pinned = None  # the persisted frame backing `state`, for unpersist
-    for it in range(max_iter):
+
+    def step(state: DataFrame, k: int) -> DataFrame:
         msum = (
-            edges.join(state.withColumnRenamed("id", "src"), "src")
+            edges.join(state.select(F.col("id").alias("src"), "x"), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("x").alias("m"))
         )
@@ -95,22 +89,26 @@ def _eigenvector_loop(graph, max_iter, tol):
         norm1 = raw.agg(
             F.sqrt(F.sum(F.col("nx") * F.col("nx"))).alias("norm")
         ).select(F.coalesce(F.nullif("norm", F.lit(0.0)), F.lit(1.0)).alias("norm"))
-        nxt2 = (
+        return (
             raw.crossJoin(F.broadcast(norm1))
             .select("id", (F.col("nx") / F.col("norm")).alias("x"), "old")
         )
-        nxt2 = (nxt2.localCheckpoint(eager=True) if it % 3 == 2
-                else nxt2.persist(StorageLevel.MEMORY_AND_DISK))
-        delta = (
-            nxt2.agg(F.sum(F.abs(F.col("x") - F.col("old")))).collect()[0][0]
-        )
-        if pinned is not None:
-            pinned.unpersist()
-        pinned = nxt2
-        state = nxt2.select("id", "x")
-        if delta < n * tol:
-            break
+
+    # a round reads the previous state four times (raw twice, through
+    # the norm), so an uncut round multiplies the plan ~4x: 12 rounds on
+    # a 200-vertex graph took 47.6 s cut every 5th round, 9.5 s every 3rd
+    state = superstep.run(
+        graph.vertices.sparkSession, "eigenvector",
+        lambda: graph.vertices.select("id", F.lit(1.0 / n).alias("x")),
+        step, lambda new, old: _l1_stop(new, n * tol), max_iter, every=3,
+    )
     return state.select("id", F.col("x").alias("ec"))
+
+
+def _l1_stop(new: DataFrame, bound: float) -> tuple[dict, bool]:
+    """Power-iteration action: ``Σ|x − old| < bound`` stops."""
+    delta = new.agg(F.sum(F.abs(F.col("x") - F.col("old")))).collect()[0][0]
+    return {"l1_delta": delta}, delta < bound
 
 
 def katz_centrality(
@@ -123,24 +121,18 @@ def katz_centrality(
     """``(id long, kc double)`` — Katz with L2 normalization at the
     end (NetworkX semantics, reference katz app).  AQE stays ON
     (A/B-measured neutral-to-better for the dense-state loop)."""
-    return _katz_loop(graph, alpha, beta, max_iter, tol)
-
-
-def _katz_loop(graph, alpha, beta, max_iter, tol):
     edges = graph.edges if graph.directed else graph.symmetrized_edges()
     edges = edges.select("src", "dst").localCheckpoint(eager=True)
     n = graph.vertices.count()
-    state = graph.vertices.select("id", F.lit(0.0).alias("x")).localCheckpoint(
-        eager=True
-    )
-    for it in range(max_iter):
+
+    def step(state: DataFrame, k: int) -> DataFrame:
         msum = (
-            edges.join(state.withColumnRenamed("id", "src"), "src")
+            edges.join(state.select(F.col("id").alias("src"), "x"), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("x").alias("m"))
         )
-        nxt = (
-            state.withColumnRenamed("x", "old")
+        return (
+            state.select("id", F.col("x").alias("old"))
             .join(msum, "id", "left")
             .select(
                 "id",
@@ -148,13 +140,14 @@ def _katz_loop(graph, alpha, beta, max_iter, tol):
                 "old",
             )
         )
-        nxt = (nxt.localCheckpoint(eager=True) if it % 3 == 2
-               else nxt.persist(StorageLevel.MEMORY_AND_DISK))
-        delta = nxt.agg(F.sum(F.abs(F.col("x") - F.col("old")))).collect()[0][0]
-        state.unpersist()
-        state = nxt.select("id", "x")
-        if delta < n * tol:
-            break
+
+    # a round reads the previous state twice: 12 rounds on a 200-vertex
+    # graph took 4.3 s cut every 3rd round, 5.1 s every 5th
+    state = superstep.run(
+        graph.vertices.sparkSession, "katz",
+        lambda: graph.vertices.select("id", F.lit(0.0).alias("x")),
+        step, lambda new, old: _l1_stop(new, n * tol), max_iter, every=3,
+    )
     norm = state.agg(F.sqrt(F.sum(F.col("x") * F.col("x")))).collect()[0][0] or 1.0
     return state.select("id", (F.col("x") / norm).alias("kc"))
 
@@ -166,10 +159,6 @@ def hits(
     max-normalization and final sum-normalization (NetworkX semantics,
     reference ``apps/hits/hits.h``).  AQE stays ON (A/B-measured
     ~1.6x faster for the dense two-phase hub/auth loop)."""
-    return _hits_loop(graph, max_iter, tol)
-
-
-def _hits_loop(graph, max_iter, tol):
     # static inputs truncated once: without this every round's plan
     # re-embeds the full edge-derivation lineage and the analyzed plan
     # string grows unboundedly (OOM on explain by round ~8)
@@ -179,70 +168,75 @@ def _hits_loop(graph, max_iter, tol):
     hub = verts.select("id", F.lit(1.0 / n).alias("hub")).localCheckpoint(
         eager=True
     )
-    auth = None
-    pinned: list = []  # persisted frames backing hub/auth, for unpersist
-    for it in range(max_iter):
-        # auth(v) = Σ_{u→v} hub(u), max-normalized.  The per-round max
-        # normalizers are broadcast one-row subaggregates instead of
-        # driver collects: auth-max, hub-max, and the hub L1 delta all
-        # evaluate in ONE driver action per round (the delta collect
-        # at the end) — one round-trip, not three.
-        a_raw = (
-            verts
-            .join(
-                edges.join(hub.withColumnRenamed("id", "src"), "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("hub").alias("auth")),
-                "id",
-                "left",
+    # a round reads the previous hub four times (twice through each max
+    # normalizer), so an uncut round multiplies the plan ~4x: on the
+    # default 5-round cadence tests/test_apps2.py::test_hits ran a 6 GB
+    # driver out of heap; every third round (~64x) holds
+    with superstep.LineageCuts(graph.vertices.sparkSession, "hits",
+                               every=3) as cuts:
+        auth = None
+        pinned: list = []  # persisted frames backing hub/auth, for unpersist
+        for it in range(max_iter):
+            # auth(v) = Σ_{u→v} hub(u), max-normalized.  The per-round max
+            # normalizers are broadcast one-row subaggregates instead of
+            # driver collects: auth-max, hub-max, and the hub L1 delta all
+            # evaluate in ONE driver action per round (the delta collect
+            # at the end) — one round-trip, not three.
+            a_raw = (
+                verts
+                .join(
+                    edges.join(hub.withColumnRenamed("id", "src"), "src")
+                    .groupBy(F.col("dst").alias("id"))
+                    .agg(F.sum("hub").alias("auth")),
+                    "id",
+                    "left",
+                )
+                .select("id", F.coalesce("auth", F.lit(0.0)).alias("auth"))
             )
-            .select("id", F.coalesce("auth", F.lit(0.0)).alias("auth"))
-        )
-        amax = a_raw.agg(F.max("auth").alias("amax")).select(
-            F.coalesce(F.nullif("amax", F.lit(0.0)), F.lit(1.0)).alias("amax")
-        )
-        a = a_raw.crossJoin(F.broadcast(amax)).select(
-            "id", (F.col("auth") / F.col("amax")).alias("auth")
-        )
-        a = (a.localCheckpoint(eager=True) if it % 3 == 2
-             else a.persist(StorageLevel.MEMORY_AND_DISK))
-        # hub(u) = Σ_{u→v} auth(v), max-normalized
-        h_raw = (
-            verts
-            .join(
-                edges.join(a.withColumnRenamed("id", "dst"), "dst")
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.sum("auth").alias("hub")),
-                "id",
-                "left",
+            amax = a_raw.agg(F.max("auth").alias("amax")).select(
+                F.coalesce(F.nullif("amax", F.lit(0.0)), F.lit(1.0)).alias("amax")
             )
-            .select("id", F.coalesce("hub", F.lit(0.0)).alias("hub"))
+            a = a_raw.crossJoin(F.broadcast(amax)).select(
+                "id", (F.col("auth") / F.col("amax")).alias("auth")
+            )
+            a = cuts.maybe(a, it, persist=True)
+            # hub(u) = Σ_{u→v} auth(v), max-normalized
+            h_raw = (
+                verts
+                .join(
+                    edges.join(a.withColumnRenamed("id", "dst"), "dst")
+                    .groupBy(F.col("src").alias("id"))
+                    .agg(F.sum("auth").alias("hub")),
+                    "id",
+                    "left",
+                )
+                .select("id", F.coalesce("hub", F.lit(0.0)).alias("hub"))
+            )
+            hmax = h_raw.agg(F.max("hub").alias("hmax")).select(
+                F.coalesce(F.nullif("hmax", F.lit(0.0)), F.lit(1.0)).alias("hmax")
+            )
+            h = h_raw.crossJoin(F.broadcast(hmax)).select(
+                "id", (F.col("hub") / F.col("hmax")).alias("hub")
+            )
+            h = cuts.maybe(h, it, persist=True)
+            delta = (
+                h.join(hub.withColumnRenamed("hub", "old"), "id")
+                .agg(F.sum(F.abs(F.col("hub") - F.col("old"))))
+                .collect()[0][0]
+            )
+            for p in pinned:
+                p.unpersist()
+            pinned = [a, h]
+            hub, auth = h, a
+            if delta < tol:
+                break
+        hsum = hub.agg(F.sum("hub")).collect()[0][0] or 1.0
+        asum = auth.agg(F.sum("auth")).collect()[0][0] or 1.0
+        result = (
+            hub.select("id", (F.col("hub") / hsum).alias("hub"))
+            .join(auth.select("id", (F.col("auth") / asum).alias("auth")), "id")
         )
-        hmax = h_raw.agg(F.max("hub").alias("hmax")).select(
-            F.coalesce(F.nullif("hmax", F.lit(0.0)), F.lit(1.0)).alias("hmax")
-        )
-        h = h_raw.crossJoin(F.broadcast(hmax)).select(
-            "id", (F.col("hub") / F.col("hmax")).alias("hub")
-        )
-        h = (h.localCheckpoint(eager=True) if it % 3 == 2
-             else h.persist(StorageLevel.MEMORY_AND_DISK))
-        delta = (
-            h.join(hub.withColumnRenamed("hub", "old"), "id")
-            .agg(F.sum(F.abs(F.col("hub") - F.col("old"))))
-            .collect()[0][0]
-        )
-        for p in pinned:
-            p.unpersist()
-        pinned = [a, h]
-        hub, auth = h, a
-        if delta < tol:
-            break
-    hsum = hub.agg(F.sum("hub")).collect()[0][0] or 1.0
-    asum = auth.agg(F.sum("auth")).collect()[0][0] or 1.0
-    return (
-        hub.select("id", (F.col("hub") / hsum).alias("hub"))
-        .join(auth.select("id", (F.col("auth") / asum).alias("auth")), "id")
-    )
+        return cuts.keep(result)
 
 
 def harmonic_centrality(
@@ -297,7 +291,7 @@ def closeness_centrality(
     AQE stays ON here: the flood's growing state union + distinct
     benefits heavily from runtime coalesce (A/B-measured ~7x FASTER
     with AQE at sf0.01 — the opposite of the fixed-shape frontier
-    loops; see ``plans.adaptive``).
+    loops; see ``plans.superstep``).
     """
     return _closeness_loop(graph, wf_improved, sources)
 

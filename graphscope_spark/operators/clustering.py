@@ -29,6 +29,7 @@ from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import Graph
 from graphscope_spark.operators.triangles import triangles
+from graphscope_spark.plans import superstep
 
 
 def lcc(graph: Graph) -> DataFrame:
@@ -219,49 +220,43 @@ def densest_subgraph_approx(
 
 def kcore(graph: Graph, k: int, max_iter: int = 10_000) -> DataFrame:
     """``(id long, in_kcore int)`` — 1 if v survives k-core peeling
-    (reference ``kcore.h`` / ``kcore_context.h:31-56``).  AQE pinned
-    off for the peel loop (~30% measured; see ``plans.adaptive``)."""
-    from graphscope_spark.plans.adaptive import superstep_conf
-
-    with superstep_conf(graph.vertices.sparkSession, False):
-        return _kcore_loop(graph, k, max_iter)
-
-
-def _kcore_loop(graph: Graph, k: int, max_iter: int) -> DataFrame:
+    (reference ``kcore.h`` / ``kcore_context.h:31-56``)."""
+    spark = graph.vertices.sparkSession
     edges = graph.symmetrized_edges().select("src", "dst").persist(
         StorageLevel.MEMORY_AND_DISK
     )
     alive_edges = edges
-    for step in range(max_iter):
-        deg = alive_edges.groupBy(F.col("src").alias("id")).agg(
-            F.count(F.lit(1)).alias("d")
+    with superstep.aqe_scope(spark, "kcore"), \
+            superstep.LineageCuts(spark, "kcore") as cuts:
+        for step in range(max_iter):
+            deg = alive_edges.groupBy(F.col("src").alias("id")).agg(
+                F.count(F.lit(1)).alias("d")
+            )
+            # keep MUST be cut every round: nxt references alive_edges
+            # once directly and twice through keep, so an uncut keep
+            # makes the logical plan grow 3^rounds (explain-string OOM
+            # by round ~6)
+            keep = cuts.cut(deg.where(F.col("d") >= k).select("id"))
+            nxt = (
+                alive_edges.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
+                .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
+            )
+            nxt = cuts.maybe(nxt, step, persist=True)
+            before, after = alive_edges.count(), nxt.count()
+            if alive_edges is not edges:
+                alive_edges.unpersist()
+            alive_edges = nxt
+            if after == before:
+                break
+        core = (
+            alive_edges.select(F.col("src").alias("id")).distinct()
+            .withColumn("in_kcore", F.lit(1))
         )
-        # keep MUST be lineage-truncated every round: nxt references
-        # alive_edges once directly and twice through keep, so an
-        # untruncated keep makes the logical plan grow 3^rounds
-        # (explain-string OOM by round ~6)
-        keep = deg.where(F.col("d") >= k).select("id").localCheckpoint(
-            eager=True
+        return cuts.keep(
+            graph.vertices.select("id")
+            .join(core, "id", "left")
+            .select("id", F.coalesce("in_kcore", F.lit(0)).alias("in_kcore"))
         )
-        nxt = (
-            alive_edges.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
-        )
-        nxt = (nxt.localCheckpoint(eager=True) if step % 3 == 2
-               else nxt.persist(StorageLevel.MEMORY_AND_DISK))
-        before, after = alive_edges.count(), nxt.count()
-        alive_edges = nxt
-        if after == before:
-            break
-    core = (
-        alive_edges.select(F.col("src").alias("id")).distinct()
-        .withColumn("in_kcore", F.lit(1))
-    )
-    return (
-        graph.vertices.select("id")
-        .join(core, "id", "left")
-        .select("id", F.coalesce("in_kcore", F.lit(0)).alias("in_kcore"))
-    )
 
 
 def kshell(graph: Graph, k: int) -> DataFrame:
@@ -431,30 +426,13 @@ def onion_layers(graph: Graph, max_iter: int = 10_000) -> DataFrame:
             ).alias("d")
         )
     )
-    from graphscope_spark.plans.checkpoint import LoopTruncator
+    pending = (F.col("layer") == -1) & (F.col("d") <= F.col("core"))
 
-    # The layer loop runs one round PER onion layer — routinely past
-    # the ~15-round chained-localCheckpoint cliff (see LoopTruncator),
-    # so state truncation must be the hybrid hard-cut.
-    trunc = LoopTruncator(graph.vertices.sparkSession, "onion")
-    state = trunc.cut(
-        d0.select(
-            "id", "core", F.col("d").cast("long").alias("d"),
-            F.lit(-1).cast("long").alias("layer"),
-        )
-    )
-    for i in range(max_iter):
-        newly = state.where(
-            (F.col("layer") == -1) & (F.col("d") <= F.col("core"))
-        ).select("id", F.col("core").alias("score"))
-        if newly.limit(1).count() == 0:
-            break
+    def step(state: DataFrame, i: int) -> DataFrame:
+        newly = state.where(pending).select("id", F.col("core").alias("score"))
         ranked = state.withColumn(
             "layer",
-            F.when(
-                (F.col("layer") == -1) & (F.col("d") <= F.col("core")),
-                F.lit(i).cast("long"),
-            ).otherwise(F.col("layer")),
+            F.when(pending, F.lit(i).cast("long")).otherwise(F.col("layer")),
         )
         # decrement unranked SAME-core neighbors of the just-ranked set
         dec = (
@@ -465,7 +443,7 @@ def onion_layers(graph: Graph, max_iter: int = 10_000) -> DataFrame:
             .groupBy("id")
             .agg(F.count(F.lit(1)).alias("dc"))
         )
-        state = trunc.cut(
+        return (
             ranked.join(dec, "id", "left")
             .select(
                 "id", "core",
@@ -475,12 +453,24 @@ def onion_layers(graph: Graph, max_iter: int = 10_000) -> DataFrame:
                 "layer",
             )
         )
+
+    def action(new: DataFrame, old: DataFrame):
+        left = new.where(pending).count()
+        return {"pending": float(left)}, left == 0
+
+    state = superstep.run(
+        graph.vertices.sparkSession, "onion",
+        lambda: d0.select(
+            "id", "core", F.col("d").cast("long").alias("d"),
+            F.lit(-1).cast("long").alias("layer"),
+        ),
+        step, action, max_iter,
+        # a round reads the previous state three times: the peel of a
+        # 200-vertex graph took 13.6 s cut every round, 29.4 s every 5th
+        every=1,
+    )
     edges.unpersist()
-    out = state.select("id", "core", "layer")
-    # materialize before the scratch dir vanishes
-    out = out.localCheckpoint(eager=True)
-    trunc.close()
-    return out
+    return state.select("id", "core", "layer")
 
 
 def degeneracy_ordering(graph: Graph) -> DataFrame:

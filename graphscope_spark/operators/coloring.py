@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import Graph
+from graphscope_spark.plans import superstep
 
 
 def greedy_coloring(graph: Graph, max_iter: int = 200) -> DataFrame:
@@ -49,14 +50,8 @@ def greedy_coloring(graph: Graph, max_iter: int = 200) -> DataFrame:
         .select("src", "dst")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    from graphscope_spark.plans.checkpoint import LoopTruncator
 
-    # mex-fixpoint rounds are bounded by the priority-DAG depth, which
-    # can exceed the ~15-round chained-localCheckpoint cliff — use the
-    # hybrid hard-cut truncator (see plans.checkpoint.LoopTruncator).
-    trunc = LoopTruncator(graph.vertices.sparkSession, "coloring")
-    state = trunc.cut(graph.vertices.select("id", F.lit(0).alias("c")))
-    for _ in range(max_iter):
+    def step(state: DataFrame, k: int) -> DataFrame:
         used = (
             dom.join(
                 state.select(F.col("id").alias("src"), "c"), "src"
@@ -71,8 +66,8 @@ def greedy_coloring(graph: Graph, max_iter: int = 200) -> DataFrame:
             ),
             1,
         )
-        nxt = trunc.cut(
-            state.withColumnRenamed("c", "old")
+        return (
+            state.select("id", F.col("c").alias("old"))
             .join(used, "id", "left")
             .select(
                 "id",
@@ -82,13 +77,17 @@ def greedy_coloring(graph: Graph, max_iter: int = 200) -> DataFrame:
                 "old",
             )
         )
-        changed = nxt.where(F.col("c") != F.col("old")).count()
-        state = nxt.select("id", "c")
-        if changed == 0:
-            break
+
+    def action(new: DataFrame, old: DataFrame):
+        changed = new.where(F.col("c") != F.col("old")).count()
+        return {"changed": float(changed)}, changed == 0
+
+    # the fixpoint on a 200-vertex graph took 5.7 s cut every round,
+    # 9.6 s every 5th (a round reads the previous state twice)
+    state = superstep.run(
+        graph.vertices.sparkSession, "coloring",
+        lambda: graph.vertices.select("id", F.lit(0).alias("c")),
+        step, action, max_iter, every=1,
+    )
     dom.unpersist()
-    out = state.select(
-        "id", F.col("c").cast("int").alias("color")
-    ).localCheckpoint(eager=True)
-    trunc.close()
-    return out
+    return state.select("id", F.col("c").cast("int").alias("color"))

@@ -17,8 +17,10 @@ transitive-closure SQL oracle comparable row-for-row.
 
 Spark shape: every step is a frontier- or degree-style join over the
 live edge set; each fixpoint round is one join + one map-combined
-aggregation.  ``localCheckpoint`` truncates lineage per round (the
-iterative-plan-growth OOM documented in SURVEY §4).  On web graphs
+aggregation.  Each round's frames are read several times, so they are
+``localCheckpoint``-ed every round rather than on the cut schedule of
+``plans.superstep`` (the iterative-plan-growth OOM documented in
+SURVEY §4).  On web graphs
 trim kills the huge DAG-like periphery in a few rounds and coloring
 handles the giant SCC in O(diameter) rounds — the known scalable
 decomposition for power-law digraphs.

@@ -42,7 +42,7 @@ from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.functions.text import h60
 from graphscope_spark.graph import Graph
-from graphscope_spark.plans.checkpoint import LoopTruncator
+from graphscope_spark.plans import superstep
 
 
 def fluid_community(
@@ -82,22 +82,7 @@ def fluid_community(
         edges = edges.repartition(graph.num_partitions, "src")
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
 
-    # >12-round loop: hybrid hard-cut truncation (see
-    # plans.checkpoint.LoopTruncator for the measured localCheckpoint
-    # chain cliff this avoids)
-    trunc = LoopTruncator(spark, "fluid")
-    state = trunc.cut(
-        graph.vertices.select(
-            "id",
-            F.when(F.col("id").isin(seed_ids), F.col("id"))
-            .cast("long")
-            .alias("lab"),
-            F.lit(None).cast("long").alias("plab"),
-        )
-    )
-
-    zero_streak = 0
-    for _rnd in range(rounds):
+    def step(state: DataFrame, rnd: int) -> DataFrame:
         labeled = state.where(F.col("lab").isNotNull())
         cnt = labeled.groupBy("lab").agg(F.count("*").alias("c"))
         incident = (
@@ -153,20 +138,33 @@ def fluid_community(
                 F.col("lab").alias("plab"),
             )
         )
-        state = trunc.cut(new_state)
+        return new_state
+
+    zero_streak = [0]
+
+    def action(new: DataFrame, old: DataFrame):
         # (lab, plab) -> next state is a deterministic map, so two
         # consecutive zero-change rounds mean the state is absorbing:
         # exiting early returns exactly what `rounds` rounds would
-        changed = state.where(
-            ~F.col("lab").eqNullSafe(F.col("plab"))
-        ).count()
-        zero_streak = zero_streak + 1 if changed == 0 else 0
-        if zero_streak >= 2:
-            break
+        changed = new.where(~F.col("lab").eqNullSafe(F.col("plab"))).count()
+        zero_streak[0] = zero_streak[0] + 1 if changed == 0 else 0
+        return {"changed": float(changed)}, zero_streak[0] >= 2
 
-    out = state.select(
-        "id", F.coalesce("lab", F.lit(-1)).cast("long").alias("community")
-    ).localCheckpoint(eager=True)
+    state = superstep.run(
+        spark, "fluid",
+        lambda: graph.vertices.select(
+            "id",
+            F.when(F.col("id").isin(seed_ids), F.col("id"))
+            .cast("long")
+            .alias("lab"),
+            F.lit(None).cast("long").alias("plab"),
+        ),
+        step, action, rounds,
+        # a round reads the previous state five times: 20 rounds on a
+        # 200-vertex graph took 7.2 s cut every round, 64.1 s every 5th
+        every=1,
+    )
     edges.unpersist()
-    trunc.close()
-    return out
+    return state.select(
+        "id", F.coalesce("lab", F.lit(-1)).cast("long").alias("community")
+    )

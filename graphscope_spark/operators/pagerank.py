@@ -17,19 +17,18 @@ the cached CSR adjacency with the rank state, one shuffle aggregation
 of exploded contributions by ``dst`` (map-side partial sum = GAE's
 message combining), and ONE driver action that computes the L1 delta
 and the next dangling sum together — three logical steps, a single
-Spark job per superstep.
+Spark job per superstep.  The loop itself is ``plans.superstep.run``.
 """
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import Graph
-from graphscope_spark.plans.checkpoint import CheckpointManager, maybe_truncate_lineage
+from graphscope_spark.plans import superstep
+from graphscope_spark.plans.checkpoint import CheckpointManager
 
 
 def pagerank(
@@ -38,9 +37,6 @@ def pagerank(
     max_iter: int = 100,
     tol: float = 1e-06,
     checkpoint: CheckpointManager | None = None,
-    lineage_truncate_every: int = 5,
-    message_combine: str = "map",
-    adaptive: bool = False,
     stats: dict | None = None,
     init_ranks: DataFrame | None = None,
 ) -> DataFrame:
@@ -52,35 +48,34 @@ def pagerank(
     (streaming micro-batch, incremental update) converges in a few
     rounds instead of from scratch.
 
-    ``adaptive=False`` pins AQE off for the superstep loop (restored
-    after): the per-round plan is fixed-shape, skew is handled by
-    map-side combine + salting, and adaptive re-planning measured
-    ~35% overhead per loop at sf0.1 (see ``plans.adaptive``).
-
     ``tol <= 0`` gives the fixed-round LDBC/Graphalytics variant
     (``grape::PageRankOpt`` with ``delta=0.85, max_round=10`` pinned in
     ``test/run_app.h:342-358``) — exactly ``max_iter`` rounds.
 
-    ``message_combine`` picks the message-reduction strategy:
+    ``stats`` receives ``rounds`` and ``final_l1`` (and the last
+    superstep's committed metrics)."""
 
-    - ``"map"`` (default): plain ``groupBy`` — Spark's map-side
-      partial sum combines messages before the shuffle.  Wins when the
-      per-task dedup factor is high (power-law hubs combine millions
-      of messages into one entry).
-    - ``"shuffle"``: explicit ``repartition(dst)`` before the
-      aggregation, so combining happens only after the shuffle in
-      small per-partition tables.  Wins when E/V is small: the partial
-      agg's per-task hash table spans ~all vertices, blowing the cache
-      for a <2x message reduction (measured 1.3-1.6x faster and
-      better core-scaling on the 60M-edge synthetic graph).
-    """
-    from graphscope_spark.plans.adaptive import superstep_conf
-
-    with superstep_conf(graph.vertices.sparkSession, adaptive):
-        return _pagerank_loop(
-            graph, alpha, max_iter, tol, checkpoint,
-            lineage_truncate_every, message_combine, stats, init_ranks,
+    def init(base_v: DataFrame, n: int) -> DataFrame:
+        if init_ranks is None:
+            return base_v.select("id", F.lit(1.0 / n).alias("rank"))
+        # warm start: carry over prior ranks, default new vertices to
+        # 1/N, renormalize so the mass invariant (Σ rank = 1) holds
+        seeded = base_v.select("id").join(
+            init_ranks.select("id", F.col("rank").alias("r0")), "id", "left"
+        ).select("id", F.coalesce("r0", F.lit(1.0 / n)).alias("rank"))
+        total = seeded.agg(F.sum("rank")).first()[0] or 1.0
+        return seeded.select(
+            "id", (F.col("rank") / F.lit(float(total))).alias("rank")
         )
+
+    out = _rank_loop(
+        graph, "pagerank", alpha, max_iter, tol, init,
+        lambda n, dsum: F.lit((1.0 - alpha) / n + dsum / n),
+        checkpoint, stats,
+    )
+    if stats is not None and "l1_delta" in stats:
+        stats["final_l1"] = stats["l1_delta"]
+    return out
 
 
 def personalized_pagerank(
@@ -98,79 +93,15 @@ def personalized_pagerank(
         r'(v) = α·Σ_{u→v} r(u)/outdeg(u)
                 + [v = s]·((1-α) + α·dangling_sum)
 
-    Same superstep shape as global PageRank (cached adjacency join +
-    one combined message shuffle); AQE pinned off for the loop."""
-    from graphscope_spark.plans.adaptive import superstep_conf
-
-    spark = graph.vertices.sparkSession
-    with superstep_conf(spark, False):
-        adj = graph.adjacency("out" if graph.directed else "both", cache=True)
-        if graph.directed:
-            deg = graph.out_degrees().withColumnRenamed("out_degree", "deg")
-        else:
-            deg = graph.degrees().withColumnRenamed("degree", "deg")
-        base_v = deg.withColumn("dangling", F.col("deg") == 0)
-        base_v = base_v.persist(StorageLevel.MEMORY_AND_DISK)
-        n = base_v.count()
-        if n == 0:
-            return base_v.select("id", F.lit(0.0).alias("rank"))
-        state = base_v.select(
-            "id",
-            F.when(F.col("id") == int(source), 1.0).otherwise(0.0).alias("rank"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        dangling_sum = (
-            state.join(base_v.where("dangling").select("id"), "id",
-                       "left_semi")
-            .agg(F.sum("rank")).collect()[0][0] or 0.0
-        ) * alpha
-        for step in range(max_iter):
-            contribs = (
-                adj.join(state.withColumnRenamed("id", "src"), "src")
-                .select(
-                    F.explode("dst_list").alias("id"),
-                    (F.col("rank") / F.col("degree")).alias("c"),
-                )
-                .groupBy("id")
-                .agg(F.sum("c").alias("msum"))
-            )
-            src_mass = (1.0 - alpha) + dangling_sum
-            new_state = (
-                base_v.join(contribs, "id", "left")
-                .select(
-                    "id",
-                    (alpha * F.coalesce("msum", F.lit(0.0))
-                     + F.when(F.col("id") == int(source),
-                              F.lit(src_mass)).otherwise(0.0)).alias("rank"),
-                    "dangling",
-                )
-            )
-            new_state = maybe_truncate_lineage(
-                new_state.persist(StorageLevel.MEMORY_AND_DISK), step, 5
-            )
-            if tol > 0:
-                row = (
-                    new_state.withColumnRenamed("rank", "new_rank")
-                    .join(state.withColumnRenamed("rank", "old_rank"), "id")
-                    .agg(
-                        F.sum(F.abs(F.col("new_rank") - F.col("old_rank"))
-                              ).alias("l1"),
-                        F.sum(F.when(F.col("dangling"), F.col("new_rank"))
-                              .otherwise(0.0)).alias("dsum"),
-                    ).collect()[0]
-                )
-                l1 = row["l1"] or 0.0
-            else:
-                row = new_state.agg(
-                    F.sum(F.when(F.col("dangling"), F.col("rank"))
-                          .otherwise(0.0)).alias("dsum")
-                ).collect()[0]
-                l1 = 0.0
-            dangling_sum = (row["dsum"] or 0.0) * alpha
-            state.unpersist()
-            state = new_state.select("id", "rank")
-            if tol > 0 and l1 < tol * n:
-                break
-        return state.select("id", "rank")
+    Same superstep as global PageRank."""
+    is_src = F.col("id") == int(source)
+    return _rank_loop(
+        graph, "personalized_pagerank", alpha, max_iter, tol,
+        lambda base_v, n: base_v.select(
+            "id", F.when(is_src, 1.0).otherwise(0.0).alias("rank")),
+        lambda n, dsum: F.when(is_src, F.lit((1.0 - alpha) + dsum))
+        .otherwise(0.0),
+    )
 
 
 def articlerank(
@@ -180,181 +111,114 @@ def articlerank(
     like PageRank but contributions divide by ``outdeg(u) + ⟨outdeg⟩``
     so low-degree citers are dampened.  Reference protocol exactly:
     init 0, fixed rounds of ``r'(v) = (1-d) + d·Σ_{u→v} r(u)/(deg(u)+avg)``
-    (no dangling redistribution, no normalization).  Same cached
-    adjacency + one message shuffle superstep; AQE pinned off."""
-    from graphscope_spark.plans.adaptive import superstep_conf
-
+    (no dangling redistribution, no normalization)."""
     spark = graph.vertices.sparkSession
-    with superstep_conf(spark, False):
+    with superstep.aqe_scope(spark, "articlerank"):
         adj = graph.adjacency("out" if graph.directed else "both",
                               cache=True)
-        if graph.directed:
-            deg = graph.out_degrees().withColumnRenamed("out_degree", "deg")
-        else:
-            deg = graph.degrees().withColumnRenamed("degree", "deg")
-        deg = deg.persist(StorageLevel.MEMORY_AND_DISK)
+        deg = _degrees(graph).persist(StorageLevel.MEMORY_AND_DISK)
         row = deg.agg(F.sum("deg").alias("t"),
                       F.count(F.lit(1)).alias("n")).collect()[0]
         avg = (row["t"] or 0) / row["n"] if row["n"] else 1.0
-        state = deg.select("id", F.lit(0.0).alias("rank"))
-        state = state.persist(StorageLevel.MEMORY_AND_DISK)
-        for step in range(max_iter):
-            contribs = (
-                adj.join(state.withColumnRenamed("id", "src"), "src")
-                .select(
-                    F.explode("dst_list").alias("id"),
-                    (F.col("rank") / (F.col("degree") + F.lit(avg))).alias("c"),
-                )
-                .groupBy("id")
-                .agg(F.sum("c").alias("msum"))
-            )
-            new_state = (
-                deg.select("id")
-                .join(contribs, "id", "left")
-                .select(
-                    "id",
-                    (damping * F.coalesce("msum", F.lit(0.0))
-                     + (1.0 - damping)).alias("rank"),
-                )
-            )
-            new_state = maybe_truncate_lineage(
-                new_state.persist(StorageLevel.MEMORY_AND_DISK), step, 5
-            )
-            new_state.count()
-            state.unpersist()
-            state = new_state
-        return state.select("id", "rank")
-
-
-def _pagerank_loop(
-    graph: Graph,
-    alpha: float,
-    max_iter: int,
-    tol: float,
-    checkpoint: CheckpointManager | None,
-    lineage_truncate_every: int,
-    message_combine: str,
-    stats: dict | None = None,
-    init_ranks: DataFrame | None = None,
-) -> DataFrame:
-    direction = "in" if graph.directed else "both"
-    # messages flow src→dst along this adjacency: for the pull-from-
-    # in-neighbors digraph semantics we keep edges as-is and aggregate
-    # on dst; degree divisor is the *out*-degree (or undirected degree).
-    adj = graph.adjacency("out" if graph.directed else "both", cache=True)
-
-    # static per-vertex base table: (id, out_degree, dangling)
-    if graph.directed:
-        deg = graph.out_degrees().withColumnRenamed("out_degree", "deg")
-    else:
-        deg = graph.degrees().withColumnRenamed("degree", "deg")
-    base_v = deg.withColumn("dangling", F.col("deg") == 0)
-    if graph.num_partitions:
-        base_v = base_v.repartition(graph.num_partitions, "id")
-    base_v = base_v.persist(StorageLevel.MEMORY_AND_DISK)
-    n = base_v.count()
-    if n == 0:
-        return base_v.select("id", F.lit(0.0).alias("rank"))
-
-    # ---- init / resume -------------------------------------------------
-    start_step = 0
-    if checkpoint is not None and (latest := checkpoint.latest_superstep()) is not None:
-        state = checkpoint.load_state(graph.vertices.sparkSession, latest)
-        state = state.persist(StorageLevel.MEMORY_AND_DISK)
-        start_step = latest + 1
-    elif init_ranks is not None:
-        # warm start: carry over prior ranks, default new vertices to
-        # 1/N, renormalize so the mass invariant (Σ rank = 1) holds
-        seeded = base_v.select("id").join(
-            init_ranks.select("id", F.col("rank").alias("r0")), "id", "left"
-        ).select("id", F.coalesce("r0", F.lit(1.0 / n)).alias("rank"))
-        total = seeded.agg(F.sum("rank")).first()[0] or 1.0
-        state = seeded.select(
-            "id", (F.col("rank") / F.lit(float(total))).alias("rank")
-        )
-        state = state.persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        state = base_v.select("id", F.lit(1.0 / n).alias("rank"))
-        state = state.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # dangling_sum = α·Σ_{dangling} r(v) over the current state
-    dangling_sum = (
-        state.join(base_v.where("dangling").select("id"), "id", "left_semi")
-        .agg(F.sum("rank"))
-        .collect()[0][0]
-        or 0.0
-    ) * alpha
-
-    for step in range(start_step, max_iter):
-        t0 = time.time()
-        per_vertex_base = (1.0 - alpha) / n + dangling_sum / n
-        msgs = (
-            adj.join(state.withColumnRenamed("id", "src"), "src")
-            .select(
-                F.explode("dst_list").alias("id"),
-                (F.col("rank") / F.col("degree")).alias("c"),
-            )
-        )
-        if message_combine == "shuffle":
-            n_part = int(
-                graph.vertices.sparkSession.conf.get(
-                    "spark.sql.shuffle.partitions"
-                )
-            )
-            msgs = msgs.repartition(n_part, "id")
-        contribs = msgs.groupBy("id").agg(F.sum("c").alias("msum"))
-        new_state = (
-            base_v.join(contribs, "id", "left")
-            .select(
+        state = superstep.run(
+            spark, "articlerank",
+            lambda: deg.select("id", F.lit(0.0).alias("rank")),
+            lambda state, k: deg.select("id").join(
+                _messages(adj, state, F.col("degree") + F.lit(avg)),
+                "id", "left",
+            ).select(
                 "id",
-                (alpha * F.coalesce("msum", F.lit(0.0)) + F.lit(per_vertex_base)).alias(
-                    "rank"
-                ),
+                (damping * F.coalesce("msum", F.lit(0.0))
+                 + (1.0 - damping)).alias("rank"),
+            ),
+            superstep.fixed_rounds, max_iter,
+        )
+    return state.select("id", "rank")
+
+
+def _degrees(graph: Graph) -> DataFrame:
+    """``(id, deg)``: the message divisor — out-degree on digraphs,
+    degree on undirected graphs."""
+    if graph.directed:
+        return graph.out_degrees().withColumnRenamed("out_degree", "deg")
+    return graph.degrees().withColumnRenamed("degree", "deg")
+
+
+def _messages(adj: DataFrame, state: DataFrame, divisor: Column) -> DataFrame:
+    """``(id, msum)``: Σ_{u→v} rank(u)/divisor(u) — one co-partitioned
+    join of the cached adjacency with the rank state, one shuffle
+    aggregation of the exploded contributions by ``dst`` (map-side
+    partial sum = GAE's message combining)."""
+    return (
+        adj.join(state.select(F.col("id").alias("src"), "rank"), "src")
+        .select(F.explode("dst_list").alias("id"), (F.col("rank") / divisor).alias("c"))
+        .groupBy("id")
+        .agg(F.sum("c").alias("msum"))
+    )
+
+
+def _rank_loop(graph, op, alpha, max_iter, tol, init, teleport,
+               checkpoint=None, stats=None) -> DataFrame:
+    """The superstep pagerank and personalized_pagerank share:
+    ``r'(v) = α·msum(v) + teleport(n, dangling_sum)`` with
+    ``dangling_sum = α·Σ_{outdeg=0} r(v)`` of the previous state."""
+    spark = graph.vertices.sparkSession
+    # the set-up actions run under the loop's AQE setting too
+    with superstep.aqe_scope(spark, op):
+        # messages flow src→dst along this adjacency: for the pull-from-
+        # in-neighbors digraph semantics we keep edges as-is and
+        # aggregate on dst; degree divisor is the *out*-degree (or
+        # undirected degree).
+        adj = graph.adjacency("out" if graph.directed else "both", cache=True)
+        # static per-vertex base table: (id, deg, dangling)
+        base_v = _degrees(graph).withColumn("dangling", F.col("deg") == 0)
+        if graph.num_partitions:
+            base_v = base_v.repartition(graph.num_partitions, "id")
+        base_v = base_v.persist(StorageLevel.MEMORY_AND_DISK)
+        n = base_v.count()
+        if n == 0:
+            return base_v.select("id", F.lit(0.0).alias("rank"))
+        dangling = F.sum(
+            F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)
+        ).alias("dsum")
+        mass: list[float] = []  # α·Σ_{dangling} r(v) of the state in hand
+
+        def step(state: DataFrame, k: int) -> DataFrame:
+            if not mass:  # first superstep of this call: fresh or resumed
+                mass.append(alpha * (
+                    state.join(base_v.where("dangling").select("id"), "id",
+                               "left_semi")
+                    .agg(F.sum("rank")).collect()[0][0] or 0.0
+                ))
+            return base_v.join(
+                _messages(adj, state, F.col("degree")), "id", "left"
+            ).select(
+                "id",
+                (alpha * F.coalesce("msum", F.lit(0.0))
+                 + teleport(n, mass[0])).alias("rank"),
                 "dangling",
             )
-        )
-        new_state = maybe_truncate_lineage(
-            new_state.persist(StorageLevel.MEMORY_AND_DISK), step, lineage_truncate_every
-        )
-        if tol > 0:
-            # single action: L1 delta + next dangling sum together
-            row = (
-                new_state.withColumnRenamed("rank", "new_rank")
-                .join(state.withColumnRenamed("rank", "old_rank"), "id")
-                .agg(
-                    F.sum(F.abs(F.col("new_rank") - F.col("old_rank"))).alias("l1"),
-                    F.sum(
-                        F.when(F.col("dangling"), F.col("new_rank")).otherwise(0.0)
-                    ).alias("dsum"),
-                )
-                .collect()[0]
-            )
-            l1, dangling_sum = row["l1"] or 0.0, (row["dsum"] or 0.0) * alpha
-        else:
-            # fixed-round mode never reads the L1 delta — the dangling
-            # sum comes from new_state alone, skipping the |V|⋈|V| join
-            row = new_state.agg(
-                F.sum(
-                    F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)
-                ).alias("dsum")
-            ).collect()[0]
-            l1, dangling_sum = 0.0, (row["dsum"] or 0.0) * alpha
-        state.unpersist()
-        state = new_state.select("id", "rank")
-        if checkpoint is not None:
-            checkpoint.save(
-                step,
-                state,
-                {
-                    "l1_delta": float(l1),
-                    "dangling_sum": float(dangling_sum),
-                    "wall_ms": (time.time() - t0) * 1000.0,
-                },
-            )
-        if stats is not None:
-            stats["rounds"] = step + 1
-            stats["final_l1"] = float(l1)
-        if tol > 0 and l1 < tol * n:
-            break
 
+        def action(new: DataFrame, old: DataFrame):
+            # single action: L1 delta + next dangling sum together;
+            # fixed-round mode never reads the L1 delta, so it skips
+            # the |V|⋈|V| join
+            if tol > 0:
+                row = new.join(
+                    old.select("id", F.col("rank").alias("old_rank")), "id"
+                ).agg(
+                    F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("l1"),
+                    dangling,
+                ).collect()[0]
+                l1 = row["l1"] or 0.0
+            else:
+                row, l1 = new.agg(dangling).collect()[0], 0.0
+            mass[0] = (row["dsum"] or 0.0) * alpha
+            return ({"l1_delta": float(l1), "dangling_sum": mass[0]},
+                    tol > 0 and l1 < tol * n)
+
+        state = superstep.run(
+            spark, op, lambda: init(base_v, n), step, action, max_iter,
+            cols=("id", "rank"), checkpoint=checkpoint, stats=stats,
+        )
     return state.select("id", "rank")

@@ -24,14 +24,15 @@ edge once.
 
 from __future__ import annotations
 
-import time
+import sys
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import Graph
-from graphscope_spark.plans.checkpoint import CheckpointManager, maybe_truncate_lineage
+from graphscope_spark.plans import superstep
+from graphscope_spark.plans.checkpoint import CheckpointManager
 
 
 def bfs(
@@ -42,61 +43,43 @@ def bfs(
     checkpoint: CheckpointManager | None = None,
 ) -> DataFrame:
     """Hop depth from ``source``: ``(id long, depth long)``, reached
-    vertices only (reference golden convention ``p2p-31-BFS``).  AQE
-    pinned off for the loop (see ``plans.adaptive``)."""
-    from graphscope_spark.plans.adaptive import superstep_conf
-
-    with superstep_conf(graph.vertices.sparkSession, False):
-        return _bfs_loop(graph, source, depth_limit, symmetrize, checkpoint)
-
-
-def _bfs_loop(graph, source, depth_limit, symmetrize, checkpoint):
+    vertices only (reference golden convention ``p2p-31-BFS``).
+    Superstep ``k`` expands the frontier ``depth == k``, so a resumed
+    run re-reads its frontier from the committed state."""
     edges = (graph.symmetrized_edges() if symmetrize else graph.edges).select(
         "src", "dst"
     )
     if graph.num_partitions:
         edges = edges.repartition(graph.num_partitions, "src")
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-
     spark = graph.vertices.sparkSession
-    state = spark.createDataFrame([(int(source), 0)], "id long, depth long")
-    frontier = state
-    depth = 0
-    persisted: list[DataFrame] = []  # frames backing state/frontier
-    while frontier.limit(1).count() > 0:
-        depth += 1
-        if depth_limit is not None and depth > depth_limit:
-            break
-        t0 = time.time()
+    level: list[int] = [0]  # the depth the last step reached
+
+    def step(state: DataFrame, k: int) -> DataFrame:
+        level[0] = k + 1
         # expand frontier; left_anti against visited keeps strict news
         cand = (
-            edges.join(frontier.withColumnRenamed("id", "src").select("src"), "src")
+            edges.join(
+                state.where(F.col("depth") == k).select(F.col("id").alias("src")),
+                "src")
             .select(F.col("dst").alias("id"))
             .distinct()
             .join(state.select("id"), "id", "left_anti")
-            .withColumn("depth", F.lit(depth).cast("long"))
+            .withColumn("depth", F.lit(k + 1).cast("long"))
         )
-        frontier = cand.persist(StorageLevel.MEMORY_AND_DISK)
-        state = maybe_truncate_lineage(
-            state.unionByName(frontier).persist(StorageLevel.MEMORY_AND_DISK),
-            depth,
-            5,
-        )
-        # materialize the new state, then release the previous
-        # rounds' frames — without this a diameter-D graph left 2·D
-        # persisted frames (each state a full copy of the reached
-        # set) in the block store for the whole session
-        state.count()
-        for f in persisted:
-            f.unpersist()
-        persisted = [frontier, state]
-        if checkpoint is not None:
-            checkpoint.save(
-                depth - 1, state,
-                {"frontier": float(frontier.count()),
-                 "wall_ms": (time.time() - t0) * 1000.0},
-            )
-    return state
+        return state.unionByName(cand)
+
+    def action(new: DataFrame, old: DataFrame):
+        frontier = new.where(F.col("depth") == level[0]).count()
+        return {"frontier": float(frontier)}, frontier == 0
+
+    return superstep.run(
+        spark, "bfs",
+        lambda: spark.createDataFrame([(int(source), 0)], "id long, depth long"),
+        step, action,
+        sys.maxsize if depth_limit is None else depth_limit,
+        checkpoint=checkpoint,
+    )
 
 
 def bfs_tree(
@@ -149,38 +132,41 @@ def sssp(
 ) -> DataFrame:
     """Shortest weighted distance from ``source``: ``(id long,
     dist double)``, reached vertices only.  Frontier-driven
-    Bellman-Ford (reference ``sssp_projected.h:83-160``).  AQE is
-    pinned off for the loop (fixed-shape supersteps; see
-    ``plans.adaptive``)."""
-    from graphscope_spark.plans.adaptive import superstep_conf
-
-    with superstep_conf(graph.vertices.sparkSession, False):
-        return _sssp_loop(graph, source, weight_col, max_iter, symmetrize,
-                          checkpoint)
-
-
-def _sssp_loop(graph, source, weight_col, max_iter, symmetrize, checkpoint):
+    Bellman-Ford (reference ``sssp_projected.h:83-160``)."""
+    spark = graph.vertices.sparkSession
     edges = _sssp_edge_table(graph, weight_col, symmetrize).persist(
         StorageLevel.MEMORY_AND_DISK
     )
+    init = spark.createDataFrame([(int(source), 0.0)], "id long, dist double")
+    return _bellman_ford(spark, "sssp", edges, init, [], max_iter,
+                         checkpoint).select("id", "dist")
 
-    spark = graph.vertices.sparkSession
-    state = spark.createDataFrame([(int(source), 0.0)], "id long, dist double")
-    state = state.persist(StorageLevel.MEMORY_AND_DISK)
-    frontier = state
 
-    for step in range(max_iter):
-        t0 = time.time()
+def _bellman_ford(spark, op, edges, init, keys, max_iter, checkpoint):
+    """Frontier-driven min-relaxation of ``dist`` keyed on
+    ``keys + ["id"]``.  The state row keeps the previous distance
+    ``old``; the frontier is the rows that improved (all rows on
+    round 0 and on resume, where ``old`` is NULL — monotone
+    min-relaxation makes the re-announce safe, at worst one redundant
+    round)."""
+    improved = F.col("old").isNull() | (F.col("dist") < F.col("old"))
+    cols = [*keys, "id", "dist"]
+    unset = F.lit(None).cast("double").alias("old")
+
+    def step(state: DataFrame, k: int) -> DataFrame:
         cand = (
-            edges.join(frontier.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
+            edges.join(
+                state.where(improved)
+                .select(*keys, F.col("id").alias("src"), "dist"),
+                "src")
+            .groupBy(*keys, F.col("dst").alias("id"))
             .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
         )
-        merged = (
-            state.withColumnRenamed("dist", "old")
-            .join(cand, "id", "full")
+        return (
+            state.select(*keys, "id", F.col("dist").alias("old"))
+            .join(cand, [*keys, "id"], "full")
             .select(
-                "id",
+                *keys, "id",
                 F.least(
                     F.coalesce("old", F.lit(float("inf"))),
                     F.coalesce("cand", F.lit(float("inf"))),
@@ -188,27 +174,16 @@ def _sssp_loop(graph, source, weight_col, max_iter, symmetrize, checkpoint):
                 "old",
             )
         )
-        merged = maybe_truncate_lineage(
-            merged.persist(StorageLevel.MEMORY_AND_DISK), step, 5
-        )
-        new_frontier = merged.where(
-            F.col("old").isNull() | (F.col("dist") < F.col("old"))
-        ).select("id", "dist").persist(StorageLevel.MEMORY_AND_DISK)
-        changed = new_frontier.count()
-        state.unpersist()
-        if frontier is not state:
-            frontier.unpersist()
-        state = merged.select("id", "dist")
-        frontier = new_frontier
-        if checkpoint is not None:
-            checkpoint.save(
-                step, state,
-                {"changed": float(changed),
-                 "wall_ms": (time.time() - t0) * 1000.0},
-            )
-        if changed == 0:
-            break
-    return state
+
+    def action(new: DataFrame, old: DataFrame):
+        changed = new.where(improved).count()
+        return {"changed": float(changed)}, changed == 0
+
+    return superstep.run(
+        spark, op, lambda: init.select(*cols, unset), step, action,
+        max_iter, cols=cols, checkpoint=checkpoint,
+        resume=lambda s: s.select(*cols, unset),
+    )
 
 
 def sssp_path(
@@ -325,8 +300,8 @@ def multi_source_sssp(
     ``prebuilt_edges`` lets a batching caller (``apsp_full_lengths``)
     build and persist the (src, dst, w) table ONCE instead of once
     per call; ``handles`` (a dict) receives the final persisted
-    state/frontier frames under ``"frames"`` (and ``"edges"``) so
-    that caller can unpersist them after materializing the result.
+    state frame under ``"frames"`` (and ``"edges"``) so that caller
+    can unpersist it after materializing the result.
 
     One frontier-driven Bellman-Ford keyed on (source, id) — the
     backbone for APSP (``apps/apsp/all_pairs_shortest_path_length.h``,
@@ -334,20 +309,27 @@ def multi_source_sssp(
     independent, so running a source SAMPLE gives exact rows for those
     sources.  Messages min-combine map-side per (source, dst) — the
     shuffle stays one per superstep regardless of the source count.
-    AQE pinned off for the loop (see ``plans.adaptive``).
 
     With ``checkpoint``, every superstep commits the (source, id,
     dist) state; a resumed run reloads the latest committed state and
-    re-announces it as the frontier (monotone min-relaxation makes the
-    re-announce safe — at worst one redundant round, same convention
-    as wcc).
+    re-announces it as the frontier (same convention as wcc);
+    ``max_iter`` counts supersteps in total, resumed ones included.
     """
-    from graphscope_spark.plans.adaptive import superstep_conf
-
-    with superstep_conf(graph.vertices.sparkSession, False):
-        return _multi_source_sssp_loop(graph, sources, weight_col, max_iter,
-                                       symmetrize, checkpoint,
-                                       prebuilt_edges, handles)
+    if prebuilt_edges is not None:
+        edges = prebuilt_edges
+    else:
+        edges = _sssp_edge_table(graph, weight_col, symmetrize).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+    src = F.col(sources.columns[0]).cast("long")
+    init = sources.select(src.alias("source"), src.alias("id"),
+                          F.lit(0.0).alias("dist"))
+    state = _bellman_ford(graph.vertices.sparkSession, "multi_source_sssp",
+                          edges, init, ["source"], max_iter, checkpoint)
+    if handles is not None:
+        handles["frames"] = [state]
+        handles["edges"] = edges
+    return state.select("source", "id", "dist")
 
 
 def _sssp_edge_table(graph, weight_col, symmetrize):
@@ -360,76 +342,6 @@ def _sssp_edge_table(graph, weight_col, symmetrize):
     if graph.num_partitions:
         edges = edges.repartition(graph.num_partitions, "src")
     return edges
-
-
-def _multi_source_sssp_loop(graph, sources, weight_col, max_iter, symmetrize,
-                            checkpoint=None, prebuilt_edges=None,
-                            handles=None):
-    if prebuilt_edges is not None:
-        edges = prebuilt_edges
-    else:
-        edges = _sssp_edge_table(graph, weight_col, symmetrize).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-
-    start_step = 0
-    if checkpoint is not None and (
-        latest := checkpoint.latest_superstep()
-    ) is not None:
-        state = checkpoint.load_state(graph.vertices.sparkSession, latest)
-        start_step = latest + 1
-    else:
-        state = sources.select(
-            F.col(sources.columns[0]).cast("long").alias("source")
-        ).select("source", F.col("source").alias("id"),
-                 F.lit(0.0).alias("dist"))
-    state = state.persist(StorageLevel.MEMORY_AND_DISK)
-    frontier = state
-    backing = state
-    for step in range(start_step, start_step + max_iter):
-        cand = (
-            edges.join(frontier.withColumnRenamed("id", "src"), "src")
-            .groupBy("source", F.col("dst").alias("id"))
-            .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
-        )
-        merged = (
-            state.withColumnRenamed("dist", "old")
-            .join(cand, ["source", "id"], "full")
-            .select(
-                "source", "id",
-                F.least(
-                    F.coalesce("old", F.lit(float("inf"))),
-                    F.coalesce("cand", F.lit(float("inf"))),
-                ).alias("dist"),
-                "old",
-            )
-        )
-        merged = maybe_truncate_lineage(
-            merged.persist(StorageLevel.MEMORY_AND_DISK), step, 4
-        )
-        new_frontier = merged.where(
-            F.col("old").isNull() | (F.col("dist") < F.col("old"))
-        ).select("source", "id", "dist").persist(StorageLevel.MEMORY_AND_DISK)
-        changed = new_frontier.count()
-        # unpersist the frames BACKING the previous round (state is a
-        # projection after round 1 — unpersisting the projection is a
-        # no-op, so track the persisted handles themselves)
-        if frontier is not state and frontier is not backing:
-            frontier.unpersist()
-        backing.unpersist()
-        state = merged.select("source", "id", "dist")
-        frontier = new_frontier
-        backing = merged
-        if checkpoint is not None:
-            checkpoint.save(step, state, {"changed": float(changed)})
-        if changed == 0:
-            break
-    if handles is not None:
-        handles["frames"] = [
-            f for f in {id(backing): backing, id(frontier): frontier}.values()
-        ]
-        handles["edges"] = edges
-    return state
 
 
 def sssp_average_length(
@@ -491,8 +403,8 @@ def apsp_full_lengths(
     never a driver-side collect of the vertex set — so the loop is
     ``batch_count`` sequential multi-source floods, each one shuffle
     per superstep regardless of batch width.  The per-batch results
-    union lazily with a hard lineage cut every few batches (the
-    chained-localCheckpoint cliff, see ``plans/checkpoint.py``).
+    union lazily with a lineage cut every four batches (so the union's
+    plan never re-embeds more than four floods).
 
     At 100 TB-class graphs exact APSP is |V|² output and inherently a
     batch job; this shape lets the caller trade wall-clock for memory

@@ -22,8 +22,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.text import h60
 from ..graph import Graph
-from ..plans.adaptive import superstep_conf
-from ..plans.checkpoint import maybe_truncate_lineage
+from ..plans import superstep
 
 
 def sample_neighbors(
@@ -201,7 +200,12 @@ def node2vec_walks(
         )
     ]
     cur = seeds
-    with superstep_conf(g.vertices.sparkSession, False):
+    spark = g.vertices.sparkSession
+    # the output union re-embeds every level's plan: uncut, it grows
+    # ~2^length and explainString OOMs the driver on length >= 6, so
+    # levels are cut every second step
+    with superstep.aqe_scope(spark, "walks"), \
+            superstep.LineageCuts(spark, "node2vec", every=2) as cuts:
         for s in range(1, length + 1):
             cand = (
                 cur.join(adj, cur["v"] == adj["src"])
@@ -254,23 +258,17 @@ def node2vec_walks(
                 )
             )
             # the frontier feeds BOTH the next step and the output
-            # union; without periodic truncation the union's analyzed
-            # plan grows ~2^length (each level re-embeds all prior
-            # joins) and explainString OOMs the driver on length ≥ 6.
-            # The LAST step cuts unconditionally so every per-step
-            # Exchange executes inside this AQE-off scope — only the
-            # narrow union of checkpointed levels runs outside it
-            if s == length:
-                cur = cur.localCheckpoint(eager=True)
-            else:
-                cur = maybe_truncate_lineage(cur, s, 2)
+            # union.  The LAST step cuts unconditionally so every
+            # per-step Exchange executes inside this AQE-off scope —
+            # only the narrow union of cut levels runs outside it
+            cur = cuts.cut(cur) if s == length else cuts.maybe(cur, s)
             out_levels.append(
                 cur.select("walk_id", F.lit(s).alias("step"), "v")
             )
-    out = out_levels[0]
-    for lv in out_levels[1:]:
-        out = out.unionByName(lv)
-    return out
+        out = out_levels[0]
+        for lv in out_levels[1:]:
+            out = out.unionByName(lv)
+        return cuts.keep(out)
 
 
 def skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
@@ -326,7 +324,11 @@ def random_walks(
     )
     levels = [seeds]
     cur = seeds
-    with superstep_conf(g.vertices.sparkSession, False):
+    spark = g.vertices.sparkSession
+    # a level reads the previous one once, so the output union's plan
+    # grows quadratically, not geometrically: the default cadence
+    with superstep.aqe_scope(spark, "walks"), \
+            superstep.LineageCuts(spark, "walks") as cuts:
         for s in range(1, length + 1):
             pick = h60(
                 F.concat_ws(
@@ -348,16 +350,11 @@ def random_walks(
                     ).alias("v"),
                 )
             )
-            # see node2vec_walks: the output union re-embeds every
-            # prior level's plan, so long walks need lineage cuts;
             # the last step cuts unconditionally so all per-step
             # Exchanges execute inside the AQE-off scope
-            if s == length:
-                cur = cur.localCheckpoint(eager=True)
-            else:
-                cur = maybe_truncate_lineage(cur, s, 3)
+            cur = cuts.cut(cur) if s == length else cuts.maybe(cur, s)
             levels.append(cur)
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
+        out = levels[0]
+        for lv in levels[1:]:
+            out = out.unionByName(lv)
+        return cuts.keep(out)

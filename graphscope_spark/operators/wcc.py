@@ -21,14 +21,13 @@ giant component's diameter is what you pay per round.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import Graph
-from graphscope_spark.plans.checkpoint import CheckpointManager, maybe_truncate_lineage
+from graphscope_spark.plans import superstep
+from graphscope_spark.plans.checkpoint import CheckpointManager
 
 
 def wcc(
@@ -36,8 +35,6 @@ def wcc(
     max_iter: int = 200,
     pointer_jumping: bool = True,
     checkpoint: CheckpointManager | None = None,
-    lineage_truncate_every: int = 5,
-    adaptive: bool = False,
     init_labels: DataFrame | None = None,
 ) -> DataFrame:
     """Returns ``(id long, comp long)`` with ``comp`` = min vertex id
@@ -59,65 +56,46 @@ def wcc(
     cheaply, so the caller must not feed compacted/delete-containing
     edge logs (see ``streaming.edge_stream.incremental_wcc``).
 
-    ``adaptive=False`` pins AQE off for the loop (restored after): the
-    superstep plan is fixed-shape and already min-combined map-side,
-    and per-round adaptive re-planning measured ~3x slower at sf0.1
-    (see ``plans.adaptive``)."""
-    from graphscope_spark.plans.adaptive import superstep_conf
-
-    with superstep_conf(graph.vertices.sparkSession, adaptive):
-        return _wcc_loop(graph, max_iter, pointer_jumping, checkpoint,
-                         lineage_truncate_every, init_labels)
-
-
-def _wcc_loop(
-    graph: Graph,
-    max_iter: int,
-    pointer_jumping: bool,
-    checkpoint: CheckpointManager | None,
-    lineage_truncate_every: int,
-    init_labels: DataFrame | None = None,
-) -> DataFrame:
+    The state row carries the previous label ``old_comp``; the
+    frontier is the rows whose label changed (all rows on round 0 and
+    on resume, where ``old_comp`` is NULL)."""
     edges = graph.symmetrized_edges().select("src", "dst")
     if graph.num_partitions:
         edges = edges.repartition(graph.num_partitions, "src")
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    unset = F.lit(None).cast("long").alias("old_comp")
 
-    start_step = 0
-    if checkpoint is not None and (latest := checkpoint.latest_superstep()) is not None:
-        state = checkpoint.load_state(graph.vertices.sparkSession, latest)
-        start_step = latest + 1
-    elif init_labels is not None:
+    def init() -> DataFrame:
+        if init_labels is None:
+            return graph.vertices.select("id", F.col("id").alias("comp"), unset)
         # guard: only labels that name a vertex of the CURRENT graph
         # are trusted (a label pointing at a removed vertex would be a
         # permanently-stale minimum); others cold-start at comp = id.
         valid = init_labels.select("id", F.col("comp").alias("c0")).join(
             graph.vertices.select(F.col("id").alias("c0")), "c0", "left_semi"
         )
-        state = graph.vertices.select("id").join(valid, "id", "left").select(
-            "id", F.coalesce("c0", F.col("id")).alias("comp")
+        return graph.vertices.select("id").join(valid, "id", "left").select(
+            "id", F.coalesce("c0", F.col("id")).alias("comp"), unset
         )
-    else:
-        state = graph.vertices.select("id", F.col("id").alias("comp"))
-    state = state.persist(StorageLevel.MEMORY_AND_DISK)
-    frontier = state  # round 0 (or resume): everyone (re)announces
 
-    for step in range(start_step, max_iter):
-        t0 = time.time()
-        # messages: frontier vertices push their comp to neighbors; min-combine
+    def step(state: DataFrame, k: int) -> DataFrame:
+        # messages: frontier vertices push their comp to neighbors;
+        # min-combine
+        frontier = state.where(
+            ~F.col("comp").eqNullSafe(F.col("old_comp"))
+        ).select(F.col("id").alias("src"), "comp")
         cand = (
-            edges.join(frontier.withColumnRenamed("id", "src"), "src")
+            edges.join(frontier, "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("comp").alias("cand"))
         )
         new_state = (
-            state.withColumnRenamed("comp", "old_comp")
+            state.select("id", F.col("comp").alias("old_comp"))
             .join(cand, "id", "left")
             .select(
                 "id",
-                F.least(F.col("old_comp"), F.coalesce("cand", F.col("old_comp"))).alias(
-                    "comp"
-                ),
+                F.least(F.col("old_comp"),
+                        F.coalesce("cand", F.col("old_comp"))).alias("comp"),
                 "old_comp",
             )
         )
@@ -136,26 +114,15 @@ def _wcc_loop(
                     "old_comp",
                 )
             )
-        new_state = maybe_truncate_lineage(
-            new_state.persist(StorageLevel.MEMORY_AND_DISK),
-            step,
-            lineage_truncate_every,
-        )
-        changed = new_state.where(F.col("comp") != F.col("old_comp")).count()
-        state.unpersist()
-        if frontier is not state:
-            frontier.unpersist()
-        state = new_state.select("id", "comp")
-        frontier = new_state.where(F.col("comp") != F.col("old_comp")).select(
-            "id", "comp"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        if checkpoint is not None:
-            checkpoint.save(
-                step,
-                state,
-                {"changed": float(changed), "wall_ms": (time.time() - t0) * 1000.0},
-            )
-        if changed == 0:
-            break
+        return new_state
 
+    def action(new: DataFrame, old: DataFrame):
+        changed = new.where(F.col("comp") != F.col("old_comp")).count()
+        return {"changed": float(changed)}, changed == 0
+
+    state = superstep.run(
+        graph.vertices.sparkSession, "wcc", init, step, action, max_iter,
+        cols=("id", "comp"), checkpoint=checkpoint,
+        resume=lambda s: s.select("id", "comp", unset),
+    )
     return state.select("id", "comp")

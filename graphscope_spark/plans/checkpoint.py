@@ -143,67 +143,3 @@ class CheckpointManager:
             return None
         return spark.read.option("basePath", mdir).parquet(*paths)
 
-
-def maybe_truncate_lineage(df: DataFrame, superstep: int, every: int = 5) -> DataFrame:
-    """Cut the logical-plan lineage chain every ``every`` supersteps via
-    ``localCheckpoint`` — the classic iterative-DataFrame fix: without
-    it the plan grows linearly in supersteps and analysis/codegen time
-    dominates by round ~30."""
-    if superstep % every == 0:
-        return df.localCheckpoint(eager=True)
-    return df
-
-
-class LoopTruncator:
-    """Hard lineage truncation for LONG superstep loops (>~12 rounds).
-
-    ``localCheckpoint(eager=True)`` truncates the analyzed logical
-    plan, but chained localCheckpoints degrade in this environment
-    (Spark 4.1, local mode): per-round time grows ~2x/round once the
-    chain passes ~15 links even though the plan string stays flat —
-    the cost sits below the logical plan (physical re-planning /
-    canonicalization over the checkpoint chain).  Measured on the
-    min-edge-cover loop: flat 0.8 s/round through round 15, then 2.0,
-    4.2, 9.1, 22, 57, 159 s.  A parquet round-trip is a *hard* cut —
-    the re-read is a fresh scan with no history — and the same loop
-    stays flat at ~1 s/round for 26+ rounds.
-
-    The hybrid policy (``hard_every=3``) localCheckpoints most rounds
-    and round-trips every third, so no chain exceeds 3 links;
-    measured: full 26-round fixpoint in 30 s vs 34 s for
-    parquet-every-round vs unbounded for pure localCheckpoint.
-
-    At cluster scale the periodic state materialization is the
-    standard Pregel-style superstep commit (|V|-row state written to
-    the job scratch dir every few rounds) — the same shape
-    ``CheckpointManager`` uses for resumability.
-    """
-
-    def __init__(self, spark: SparkSession, name: str = "loop",
-                 hard_every: int = 3):
-        import tempfile
-
-        self.spark = spark
-        self.hard_every = max(1, hard_every)
-        self.dir = tempfile.mkdtemp(prefix=f"gs_trunc_{name}_")
-        self.n = 0
-
-    def cut(self, df: DataFrame) -> DataFrame:
-        i = self.n
-        self.n += 1
-        if self.hard_every > 1 and i % self.hard_every != self.hard_every - 1:
-            return df.localCheckpoint(eager=True)
-        path = os.path.join(self.dir, f"r{i}")
-        df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
-
-    def close(self) -> None:
-        import shutil
-
-        shutil.rmtree(self.dir, ignore_errors=True)
-
-    def __enter__(self) -> "LoopTruncator":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()

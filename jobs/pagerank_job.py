@@ -67,7 +67,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     # fixed-shape superstep loop: AQE's per-round re-planning measured
     # up to 10x per-superstep overhead on the prebuilt-adjacency path
-    # (see plans/adaptive.py); the shuffle size is stable across
+    # (see plans/superstep.py); the shuffle size is stable across
     # rounds, so partitions are sized once via --shuffle-partitions
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     cores = args.cores or spark.sparkContext.defaultParallelism

@@ -85,6 +85,49 @@ def test_multi_source_sssp_resume_equivalence(spark, tmp_path):
     got = {(r["source"], r["id"]): r["dist"]
            for r in multi_source_sssp(g, srcs, checkpoint=ck).collect()}
     assert got == want
+    # max_iter counts supersteps in total, resumed ones included: a
+    # finished run asked for 2 supersteps runs none
+    latest = ck.latest_superstep()
+    multi_source_sssp(g, srcs, max_iter=2, checkpoint=ck)
+    assert ck.latest_superstep() == latest
+
+
+def _commit_ts(spark, ck):
+    """Commit time of supersteps 0 and 1."""
+    m = ck.load_metrics(spark).where(F.col("superstep") <= 1)
+    return sorted((r["superstep"], r["wall_ts"]) for r in m.collect())
+
+
+def test_bfs_resume_equivalence(spark, tmp_path):
+    from graphscope_spark.operators.traversal import bfs
+
+    g = make_graph(spark, VS, ES)
+    src = sorted(VS)[0]
+    want = df_to_dict(bfs(g, src))
+    ck = CheckpointManager(str(tmp_path), "bfs")
+    bfs(g, src, depth_limit=2, checkpoint=ck)  # "crash" after superstep 1
+    assert ck.latest_superstep() == 1
+    first = _commit_ts(spark, ck)
+    got = df_to_dict(bfs(g, src, checkpoint=ck))
+    assert got == want
+    # the resumed call continued after superstep 1 instead of
+    # restarting and overwriting the earlier commits
+    assert _commit_ts(spark, ck) == first
+
+
+def test_sssp_resume_equivalence(spark, tmp_path):
+    from graphscope_spark.operators.traversal import sssp
+
+    g = make_graph(spark, VS, ES)
+    src = sorted(VS)[0]
+    want = df_to_dict(sssp(g, src))
+    ck = CheckpointManager(str(tmp_path), "sssp")
+    sssp(g, src, max_iter=2, checkpoint=ck)  # "crash" after superstep 1
+    assert ck.latest_superstep() == 1
+    first = _commit_ts(spark, ck)
+    got = df_to_dict(sssp(g, src, checkpoint=ck))
+    assert got == want
+    assert _commit_ts(spark, ck) == first
 
 
 def test_louvain_resume_equivalence(spark, tmp_path):
