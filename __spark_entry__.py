@@ -1,9 +1,13 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query/oracle contract for external harnesses (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check (PageRank, the first registry
+entry).  Each ``queries()[name]`` runs on Spark and is compared against
+the matching ``oracle_sql()[name]`` on DuckDB (row count + column
+names + order-insensitive value hash).  Every entry is checked, so the
+registry order carries no meaning beyond ``pagerank`` first:
+``tests/test_registry_oracles.py`` compares all of them at sf0.001 and
+``tools/selfcheck.py`` at any sf dir, both through
+``tools/oracle_compare.compare``.
 
 All real logic lives in ``graphscope_spark`` (the engine) and
 ``graphscope_spark.entry`` (the query/oracle registry); this module

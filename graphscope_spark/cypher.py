@@ -836,6 +836,12 @@ class _Compiler:
                     name = "id"
                 else:
                     name = p.expect("name")[1]
+            if any(name == n for _, _, n in items):
+                # unaliased compound items all default to `expr`
+                raise ValueError(
+                    f"duplicate column name {name!r} in RETURN/WITH "
+                    "items; name each item with AS"
+                )
             items.append((kind, fac, name))
             if not p.accept("op", ","):
                 break
@@ -1009,11 +1015,17 @@ def cypher(graph: Graph, query: str) -> DataFrame:
             # observable effect — downstream joins discard row order —
             # so the global sort is elided rather than paid for
             # nothing; with SKIP/LIMIT it selects WHICH rows survive
-            # and is applied in full
+            # and is applied in full.  Either way the ORDER BY columns
+            # must be WITH items.
             worder, wskip, wlimit = _parse_order_skip_limit(p)
+            c.node_vars = [name for _, _, name in items]
+            for col, _ in worder:
+                if col not in c.node_vars:
+                    raise ValueError(
+                        f"WITH ... ORDER BY {col!r}: not a WITH item"
+                    )
             if wskip is not None or wlimit is not None:
                 df = _apply_order_skip_limit(df, worder, wskip, wlimit)
-            c.node_vars = [name for _, _, name in items]
             if p.accept("kw", "WHERE"):
                 # post-projection filter over the WITH aliases (the
                 # Cypher HAVING analog when aggregates are present)

@@ -870,12 +870,18 @@ def q_dsir_select(spark, sf_dir):
     return dsir_resample(w, k=100)
 
 
+def _gumbel_sql(h: str) -> str:
+    """SQL twin of ``functions.quality.gumbel_noise`` (2^60 + 2^8 =
+    1152921504606847232, its ``_U_DENOM``)."""
+    return f"(-ln(-ln((({h}) + 1.0) / 1152921504606847232.0)))"
+
+
 def _dsir_select_sql(k: int = 100) -> str:
     h = _H60.format("'dsir' || doc_id")
     return f"""\
 SELECT doc_id, log_weight,
        round(log_weight
-             + (-ln(-ln((({h}) + 1.0) / 1152921504606846976.0))),
+             + {_gumbel_sql(h)},
              6) AS key
 FROM ({_dsir_weights_sql()}) w
 ORDER BY key DESC, doc_id LIMIT {k}
@@ -4902,157 +4908,13 @@ def q_rel_union_intersect(spark, sf_dir):
 
 
 # --------------------------------------------------------------------
-# registry: name -> (callable, oracle sql | None)
+# registry: name -> (callable, oracle sql)
 # --------------------------------------------------------------------
 
-#: Registry order matters: the round driver's CORRECTNESS harness
-#: verifies the FIRST 50 entries.  The order below keeps the flagship
-#: graph queries up front, then everything new or changed this round,
-#: then the rest by value; the tail holds long-stable queries that
-#: already carry two rounds of green driver rows (the rel_* GIE demos
-#: and fixed-round centralities).
-_REGISTRY_ORDER = [
-    # flagships: pagerank always first; wcc pulled BACK into the
-    # window this round because its operator changed (warm-start
-    # guard) — the rule is: any query whose underlying operator
-    # changed in the current round sits inside the driver's first-50
-    # verification window, regardless of prior green rounds
-    "pagerank", "wcc",
-    # NEW in round 5: the assortativity-family close-out (the last
-    # .gs_conf.yaml registry algo with no analog) and edge_boundary
-    "attr_assortativity", "numeric_assortativity", "edge_boundary",
-    "gie_shortest_path", "cypher_topdeg", "cypher_varlen",
-    "cypher_optional", "cypher_with", "cypher_shortest", "cypher_case",
-    "line_dedup",
-    # NEW in round 5 (continuation session): published rule-based
-    # curation filters (Gopher A1.1, C4 §2.2), duplicate-span removal
-    # (Lee et al. 2021 window approximation), vocab top-k
-    "gopher_quality", "c4_clean", "span_dedup", "vocab_topk",
-    "lm_score", "dsir_weights", "dsir_select",
-    # text.py gained the shared mean_word_len helper (output-identical
-    # refactor) — its flagship consumer re-enters the window
-    "text_stats",
-    # new or operator-changed in round 4: full APSP (landmark
-    # batches), property-graph projection, single-action-per-round
-    # eigenvector/HITS, and the dedup family whose LSH banding gained
-    # the no-shingle anti-join + bucket cap (output-identical, but
-    # the plan changed → re-verify)
-    "apsp_full", "prop_project", "negative_sampling", "dfs",
-    "eigenvector10", "hits",
-    "minhash_groups", "minhash_lsh", "embedding_near_dup",
-    # NEW in round 5 (late): SemDeDup-style semantic dedup — IVF
-    # clusters + intra-cluster cosine drop decisions
-    "semantic_dedup",
-    "ngram_jaccard", "dedup_exact",
-    "embedding_topk", "rel_semijoin",
-    # walks.py's loop gained an unconditional final lineage cut this
-    # session — its walk queries re-enter the window; bfs_pred /
-    # bfs_succ (functions untouched in r5, r4-driver green) rotate out
-    "node2vec_walks",
-    # random_walks joins node2vec_walks in the window (same changed
-    # loop); min_dominating — function untouched in r5, r4-driver
-    # green — rotates out
-    "min_cover", "random_walks",
-    # multi_source_sssp loop changed late r4 (persist-handle cleanup
-    # + shared batch edge table) — every consumer re-enters the
-    # window: apsp_full is above; these are the rest
-    "random_multi_bfs",
-    "apsp_sample", "sssp_avg_length", "closeness_sample",
-    # third self-review batch changed these operators — all re-enter
-    # the window: bfs/sssp/has_path loop cleanup, sssp_path edge-table
-    # reuse, Brandes shared forward sweep, voterank NetworkX voting
-    # direction, fluid storage-agnostic undirected edges, ppr empty
-    # guard
-    "bfs", "sssp", "sssp_path", "sssp_has_path",
-    # pii_scrub re-enters (its body now routes through the shared
-    # pii_clean helper); voterank — function untouched in r5,
-    # r4-driver green — rotates out for it
-    "pii_scrub",
-    # ann_ivf/louvain stay inside the window (similarity.py changed
-    # in r5; louvain was windowed in r4 and rides along); fluid, ppr
-    # and edge_betweenness_sample rotate out to make room for the
-    # three new curation queries — fluid.py / pagerank.py /
-    # betweenness.py are untouched in r5 and all three are r4-driver
-    # green + r5 full-selfcheck green at both scales
-    "ann_ivf",
-    # gremlin_2hop_bag re-enters because gie.py/gremlin.py gained the
-    # shortestPath step this round (additive, but the window rule is
-    # module-level); tri_count AND triangles rotate to the tail to
-    # make room for it and the late-r5 semantic_dedup — both r4-green
-    # with their operator (triangles.py) untouched in r5
-    "gremlin_2hop_bag",
-    "pack_sequences", "bfs_pred", "bfs_succ", "min_dominating",
-    # cdlp pulled back in late r4 (operator gained init_labels warm
-    # start for streaming incrementals); pii_scrub — r3-green, pure
-    # column exprs, text.py untouched — rotated to the tail for it
-    "cdlp",
-    "sample_neighbors",
-    # rotated out r5 (see window note above): r4-green, operator
-    # modules untouched this round (skipgram_pairs/node2vec_walks:
-    # walks.py untouched in r5; tri_count/triangles/tri_variants:
-    # triangles.py untouched in r5) — they made room for the late-r5
-    # cypher_varlen, cypher_optional, semantic_dedup, and
-    # random_multi_bfs window entries
-    "tri_count", "triangles", "skipgram_pairs",
-    "tri_variants", "modularity",
-    # rotated out late r5 for gopher_quality/c4_clean/span_dedup/
-    # vocab_topk (see window note above); betweenness.py is untouched
-    # in r5 and both sample queries are r4-driver green
-    "fluid", "ppr", "edge_betweenness_sample", "betweenness_sample",
-    # closeness_full + harmonic_sample + louvain rotated out late r5
-    # so gremlin_2hop_bag (gie.py changed this round) and the new
-    # cypher_case stay inside the window — centrality.py / louvain.py
-    # are untouched in r5 and all three queries are r4-driver green
-    "closeness_full", "harmonic_sample", "louvain",
-    # diamond + tailed_tri + k5_count rotated out late r5 for
-    # lm_score / dsir_weights / dsir_select — triangles.py is
-    # untouched in r5 and all three are r4-driver green
-    "diamond", "tailed_tri", "k5_count",
-    # three_path rotated out late r5 for the windowed text_stats
-    # (text.py refactor) — triangles.py untouched, r4-driver green
-    "three_path",
-    # ---- position 51+: stable driver-green entries, untouched this
-    # round.  The late-r4 window additions (dfs, node2vec_walks,
-    # skipgram_pairs, triangles, tri_count, cdlp, gremlin_2hop_bag)
-    # pushed everything from scc onward past the first-50 window —
-    # all of it r2/r3-green with operators unchanged in r4, so the
-    # window rule (changed operators verified this round) holds ----
-    "scc",
-    "lcc", "kcore", "kshell", "mis", "matching", "articlerank",
-    "diameter_approx", "densest_sub",
-    "clustering_directed",
-    "lpa_u2i", "rect_count",
-    # (rotated out across late r4 — all green in earlier rounds with
-    # their implementing functions untouched in r4: text_stats/
-    # lang_id/doc_fingerprint/simhash/khop2, k_center/is_simple_path/
-    # path_sample/simple_paths, and — for the third-review-batch
-    # rotations above — bridges/cut_points/bcc/msf/core_numbers/
-    # coloring/onion_layers/degeneracy/min_edge_cover)
-    "k_center", "is_simple_path", "path_sample", "simple_paths",
-    "bridges", "cut_points", "bcc", "msf", "core_numbers",
-    "coloring", "onion_layers", "degeneracy", "min_edge_cover",
-    # rotated out late r4 for node2vec_walks/skipgram_pairs:
-    # link_jaccard/link_pa — r3-green, linkpred.py untouched in r4
-    "link_jaccard", "link_pa",
-    "lang_id", "doc_fingerprint", "simhash", "khop2",
-    # repetition_stats — r3-green, text.py untouched — rotated out
-    # late r4 for the new gremlin_2hop_bag string-front-end query
-    "repetition_stats",
-    "voterank",
-    # rotated out late r4 for triangles/tri_count (plan change):
-    # decontaminate/stratified_sample — r3-green, curation.py
-    # untouched in r4, both pytest-covered
-    "decontaminate", "stratified_sample",
-    "tri_census", "k4_count", "core_numbers_k3",
-    "katz10", "degree_centrality", "avg_degree_connectivity",
-    "avg_clustering", "transitivity", "assortativity", "boundary",
-    "rel_group_agg", "rel_join_topk", "rel_dedup", "rel_antijoin",
-    "rel_window_topk", "rel_apply", "rel_sample", "rel_union_intersect",
-]
-
-
-def registry() -> dict[str, tuple[Callable, str | None]]:
-    entries = {
+def registry() -> dict[str, tuple[Callable, str]]:
+    # Written order is registry order.  The one rule: ``pagerank``
+    # stays first, because ``__spark_entry__.entry()`` smokes it.
+    return {
         "pagerank": (q_pagerank, _pagerank_sql(10)),
         "wcc": (q_wcc, _wcc_sql(8)),
         "cdlp": (q_cdlp, _cdlp_sql(10)),
@@ -5335,10 +5197,6 @@ def registry() -> dict[str, tuple[Callable, str | None]]:
         "tri_variants": (q_tri_variants, _TRI_VARIANTS_SQL),
         "ann_ivf": (q_ann_ivf, _ann_ivf_sql(10, 8, 2)),
     }
-    missing = [n for n in _REGISTRY_ORDER if n not in entries]
-    extra = [n for n in entries if n not in _REGISTRY_ORDER]
-    assert not missing and not extra, (missing, extra)
-    return {name: entries[name] for name in _REGISTRY_ORDER}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -5366,5 +5224,4 @@ def oracle_sql() -> dict[str, str]:
     return {
         name: _materialize_ctes(sql)
         for name, (_, sql) in registry().items()
-        if sql is not None
     }

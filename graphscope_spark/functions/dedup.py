@@ -72,7 +72,8 @@ def remove_duplicated_lines(
     trimming and (b) appears in at least ``min_docs`` DISTINCT
     documents, then reassemble each document in original line order.
     Returns ``(id_col, text_col, n_removed)`` — one row per input
-    document, empty text when every line was boilerplate.
+    document, empty text when every line was boilerplate or the text
+    is NULL.
 
     This is the standard web-corpus curation pass that strips shared
     boilerplate (navigation bars, license headers, cookie banners)
@@ -91,9 +92,12 @@ def remove_duplicated_lines(
     ``sha2(line, 256)`` when average line length outgrows 64 bytes;
     a 64-bit hash would birthday-collide near 2^32 distinct lines
     and silently delete innocent text).  Zero Python in the plan."""
+    # NULL text reads as empty: split(NULL) would explode to no rows
+    # and drop the document
+    text = F.coalesce(F.col(text_col), F.lit(""))
     lines = df.select(
         F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "line"),
+        F.posexplode(F.split(text, sep)).alias("pos", "line"),
     )
     dup = (
         lines.where(F.length(F.trim(F.col("line"))) >= min_chars)

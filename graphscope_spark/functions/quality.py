@@ -368,6 +368,20 @@ def dsir_logweights(
     )
 
 
+#: Divisor of the h60 uniform.  2^60 + 1 is not a double (it rounds
+#: back to 2^60); 2^60 + 2^8 is the next double up, so
+#: ``u = (h60 + 1) / _U_DENOM`` stays strictly inside (0, 1) even where
+#: ``h60 + 1`` itself rounds up to 2^60.
+_U_DENOM = float((1 << 60) + (1 << 8))
+
+
+def gumbel_noise(h: Column) -> Column:
+    """Standard Gumbel noise ``-log(-log(u))`` from an h60 hash column
+    (``u`` uniform in (0, 1)); finite for every h60 value."""
+    u = (h.cast("double") + F.lit(1.0)) / F.lit(_U_DENOM)
+    return -F.log(-F.log(u))
+
+
 def dsir_resample(
     weights: DataFrame,
     k: int,
@@ -383,12 +397,9 @@ def dsir_resample(
     deterministic and engine-reproducible.  Plan shape:
     ``TakeOrderedAndProject`` over one per-row projection — no global
     sort, no driver-side randomness."""
-    u = (
-        (h60(F.concat(F.lit(seed), F.col(id_col).cast("string")))
-         .cast("double") + F.lit(1.0))
-        / F.lit(float(1 << 60))
+    gumbel = gumbel_noise(
+        h60(F.concat(F.lit(seed), F.col(id_col).cast("string")))
     )
-    gumbel = -F.log(-F.log(u))
     return (
         weights.select(
             F.col(id_col),

@@ -28,13 +28,18 @@ def _module_cache_sweep():
     yield
     spark = SparkSession.getActiveSession()
     if spark is not None:
-        spark.catalog.clearCache()
-        sc = spark.sparkContext
-        for rdd_id in list(sc._jsc.getPersistentRDDs().keySet()):
-            try:
-                sc._jsc.sc().unpersistRDD(rdd_id, False)
-            except Exception:
-                pass
+        release_cached_blocks(spark)
+
+
+def release_cached_blocks(spark):
+    """Clear the SQL cache and unpersist every persisted RDD."""
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    for rdd_id in list(sc._jsc.getPersistentRDDs().keySet()):
+        try:
+            sc._jsc.sc().unpersistRDD(rdd_id, False)
+        except Exception:
+            pass
 
 
 def make_graph(spark, vertices, edges, directed=True, num_partitions=4):

@@ -698,6 +698,26 @@ def test_with_order_skip(spark, g):
     assert got == sorted(ranked[1:3])
 
 
+def test_with_order_by_unknown_column_raises(spark, g):
+    # the sort is elided without SKIP/LIMIT, but the column is still
+    # checked against the WITH items
+    for tail in ("", " LIMIT 2"):
+        q = ("MATCH (a)-->(b) WITH a, count(*) AS n ORDER BY nn DESC"
+             + tail + " MATCH (a)-->(c) RETURN a, c")
+        with pytest.raises(ValueError, match="not a WITH item"):
+            cypher(g, q)
+
+
+def test_duplicate_default_item_names_raise(spark, g):
+    # both unaliased compound items would be named `expr`
+    for q in ("MATCH (a)-->(b) RETURN a.num + 1, b.num + 2",
+              "MATCH (a)-->(b) WITH a.num * 2, b.num - 1 RETURN 1"):
+        with pytest.raises(ValueError, match="AS"):
+            cypher(g, q)
+    got = cypher(g, "MATCH (a)-->(b) RETURN a.num + 1 AS x, b.num + 2 AS y")
+    assert got.columns == ["x", "y"]
+
+
 def test_with_order_without_limit_is_elided_not_wrong(spark, g):
     # ORDER BY alone on a non-terminal WITH has no observable effect
     # (downstream joins discard order) — the sort is skipped, but the

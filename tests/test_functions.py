@@ -377,6 +377,18 @@ def test_remove_duplicated_lines(spark):
     assert len(out) == 5  # all-boilerplate docs still present
 
 
+def test_remove_duplicated_lines_keeps_null_text_docs(spark):
+    from graphscope_spark.functions.dedup import remove_duplicated_lines
+
+    shared = "a shared long line of text"
+    docs = [(1, shared), (2, None), (3, shared)]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    out = {r["doc_id"]: (r["text"], r["n_removed"])
+           for r in remove_duplicated_lines(
+               df, min_docs=2, min_chars=10).collect()}
+    assert out == {1: ("", 1), 2: ("", 0), 3: ("", 1)}
+
+
 def test_remove_duplicated_lines_min_docs_threshold(spark):
     from graphscope_spark.functions.dedup import remove_duplicated_lines
 

@@ -15,10 +15,10 @@ fixed round count, so there is no fixpoint requirement.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 from graphscope_spark import entry as E
+from tools.oracle_compare import duckdb_views
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -156,16 +156,21 @@ CASES = {
 
 @pytest.fixture(scope="module")
 def con():
-    c = duckdb.connect()
-    for t in E.TABLES:
-        c.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    return c
+    c = duckdb_views(SF_DIR)
+    yield c
+    c.close()
 
 
 @pytest.mark.parametrize("name", sorted(CASES))
 def test_oracle_unroll_depth_converged(con, name):
     at_k, at_k1 = CASES[name]
-    rk = sorted(con.sql(E._materialize_ctes(at_k())).fetchall())
+    sql_k = E._materialize_ctes(at_k())
+    # depth k here is a hand copy of the registered oracle's depth;
+    # the two must not drift apart
+    assert sql_k == E.oracle_sql()[name], (
+        f"{name}: depth k here differs from the registered oracle"
+    )
+    rk = sorted(con.sql(sql_k).fetchall())
     rk1 = sorted(con.sql(E._materialize_ctes(at_k1())).fetchall())
     assert rk == rk1, (
         f"{name}: oracle not converged at its registered unroll depth"

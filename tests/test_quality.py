@@ -201,6 +201,30 @@ def test_dsir_resample_deterministic_and_weight_biased(spark):
     assert len(pick3) == 10
 
 
+def test_dsir_gumbel_key_finite_and_equal_at_max_h60(spark):
+    """At h60 = 2^60 - 1 the uniform must stay below 1.0 in both
+    engines: at u = 1.0 Spark's log(0) is NULL while DuckDB's ln(0)
+    raises, so the two keys would diverge."""
+    import math
+
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from graphscope_spark.entry import _gumbel_sql
+    from graphscope_spark.functions.quality import gumbel_noise
+
+    h = (1 << 60) - 1
+    spark_key = spark.range(1).select(
+        gumbel_noise(F.lit(h)).alias("g")
+    ).first()["g"]
+    duck_key = duckdb.sql(
+        f"SELECT {_gumbel_sql(f'{h}::BIGINT')} AS g"
+    ).fetchone()[0]
+    assert spark_key is not None and math.isfinite(spark_key)
+    assert math.isfinite(duck_key)
+    assert round(spark_key, 6) == round(duck_key, 6)
+
+
 def test_c4_clean_honors_custom_text_col(spark):
     df = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta.\n"

@@ -1,107 +1,42 @@
 """Replicates the driver's correctness compare locally: run every
 ``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB over
-the same sf dir; compare row count, column names, and an
-order-insensitive value hash.  Usage::
+the same sf dir through ``tools/oracle_compare.compare``.  Usage::
 
     python tools/selfcheck.py [sf_dir] [name ...]
 """
 
 from __future__ import annotations
 
-import hashlib
+import os
 import sys
-import time
 
-import duckdb
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-sys.path.insert(0, ".")
-
+from graphscope_spark import entry as E  # noqa: E402
 from graphscope_spark.session import get_spark  # noqa: E402
-
-import __spark_entry__ as E  # noqa: E402
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
-
-def value_hash(rows, columns):
-    """Order-insensitive but multiplicity-preserving: hash each row
-    (columns sorted by name) and SUM mod 2^64.  XOR would cancel any
-    row occurring an even number of times, letting duplicate-pair
-    discrepancies slip through when the row counts coincide."""
-    idx = sorted(range(len(columns)), key=lambda i: columns[i])
-    acc = 0
-    for row in rows:
-        key = "|".join(repr(row[i]) for i in idx)
-        acc = (acc + int.from_bytes(
-            hashlib.sha256(key.encode()).digest()[:8], "big"
-        )) % (1 << 64)
-    return acc
-
-
-def norm(v):
-    if isinstance(v, float):
-        return round(v, 9)
-    return v
+from tools.oracle_compare import compare, duckdb_views  # noqa: E402
 
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("selfcheck")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    qs, oracles = E.queries(), E.oracle_sql()
+    qs = E.queries()
     unknown = only - set(qs)
     if unknown:
         # a typo'd name previously skipped EVERYTHING and printed
         # "all OK" — a false-positive pass
         print(f"unknown queries: {sorted(unknown)}", file=sys.stderr)
         sys.exit(2)
+    spark = get_spark("selfcheck")
+    con = duckdb_views(sf_dir)
     failures = []
-    for name, fn in qs.items():
+    for name in qs:
         if only and name not in only:
             continue
-        t0 = time.time()
-        sdf = fn(spark, sf_dir)
-        scols = sdf.columns
-        srows = [tuple(norm(v) for v in r) for r in sdf.collect()]
-        t1 = time.time()
-        if name not in oracles:
-            print(f"{name:24s} rows={len(srows):7d}  (rows-only, "
-                  f"{t1 - t0:5.1f}s)")
-            continue
-        res = con.sql(oracles[name])
-        ocols = [d[0] for d in res.description]
-        orows = [tuple(norm(v) for v in r) for r in res.fetchall()]
-        t2 = time.time()
-        ok_rows = len(srows) == len(orows)
-        ok_cols = sorted(scols) == sorted(ocols)
-        ok_hash = value_hash(srows, scols) == value_hash(orows, ocols)
-        status = "OK " if (ok_rows and ok_cols and ok_hash) else "FAIL"
-        print(
-            f"{name:24s} {status} rows={len(srows)}/{len(orows)} "
-            f"cols={ok_cols} hash={ok_hash} "
-            f"(spark {t1 - t0:5.1f}s duck {t2 - t1:5.1f}s)"
-        )
-        if status == "FAIL":
+        v = compare(spark, con, name, sf_dir)
+        print(v.report())
+        if not v.ok:
             failures.append(name)
-            sset, oset = set(srows), set(orows)
-            sc_sorted = sorted(scols)
-            for label, diff, cols in (
-                ("spark-only", sset - oset, scols),
-                ("oracle-only", oset - sset, ocols),
-            ):
-                idx = sorted(range(len(cols)), key=lambda i: cols[i])
-                for r in list(diff)[:5]:
-                    print(f"    {label}: "
-                          + str({cols[i]: r[i] for i in idx}))
-            _ = sc_sorted
     spark.stop()
     if failures:
         print("FAILURES:", failures)
