@@ -371,7 +371,7 @@ class Traversal:
         Edge direction follows the graph: out-edges for directed
         graphs (GIE's default expand direction), the symmetrized set
         for undirected — override with ``symmetrize``."""
-        from .operators.traversal import bfs
+        from .operators.traversal import bfs, hop_preds, min_id_parents
         from .plans.superstep import LineageCuts
 
         assert self._kind == "v", "shortestPath starts from vertices"
@@ -397,20 +397,12 @@ class Traversal:
         dmax = int(dmax or 0)
         edges = (g.symmetrized_edges() if symmetrize
                  else g.edges).select("src", "dst")
-        du = depth.select(F.col("id").alias("src"),
-                          F.col("depth").alias("du"))
-        # predecessor multiset: u→v on a shortest path iff
-        # depth(u) + 1 == depth(v)
-        preds_all = (
-            edges.join(du, "src")
-            .join(depth.withColumnRenamed("id", "dst"), "dst")
-            .where(F.col("du") + 1 == F.col("depth"))
-            .select(F.col("dst").alias("id"), F.col("src").alias("pred"))
-            .localCheckpoint(eager=True)
-        )
         if all_shortest:
             if target is None:
                 raise ValueError("all_shortest=True requires a target")
+            # predecessor multiset: u→v on a shortest path iff
+            # depth(u) + 1 == depth(v)
+            preds_all = hop_preds(edges, depth).localCheckpoint(eager=True)
             state = spark.createDataFrame(
                 [([int(target)], int(target))], "path array<long>, head long"
             )
@@ -433,10 +425,7 @@ class Traversal:
                 return cuts.keep(done.select(
                     "path", (F.size("path") - 1).cast("int").alias("hops")
                 ))
-        tree = (
-            preds_all.groupBy("id").agg(F.min("pred").alias("pred"))
-            .localCheckpoint(eager=True)
-        )
+        tree = min_id_parents(edges, depth).localCheckpoint(eager=True)
         state = depth.select(
             "id", F.array(F.col("id")).alias("path"),
             F.col("id").alias("head"),

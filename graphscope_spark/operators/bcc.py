@@ -11,7 +11,9 @@ efficient parallel biconnectivity algorithm" (SIAM J. Computing
 DataFrame sweeps:
 
 1. BFS forest from each component's min-id root (components via
-   ``wcc``); deterministic min-id parent per non-root.
+   ``wcc``; one ``bfs`` hop flood from all roots at once);
+   deterministic min-id parent per non-root (``min_id_parents``, the
+   convention ``bfs_tree`` uses).
 2. Subtree sizes ``sz`` — one bottom-up sweep over levels.
 3. Preorder numbers ``pre`` — one top-down sweep (per-parent window
    prefix-sum of sibling subtree sizes); subtree(v) is then exactly
@@ -42,6 +44,8 @@ depth (small on real link graphs) times one shuffle per level.
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -54,43 +58,22 @@ def _bfs_forest(graph: Graph) -> tuple[DataFrame, DataFrame, DataFrame]:
 
     - ``edges`` — symmetrized simple edge set (persisted);
     - ``depth(id, depth)`` — hop depth from the component's min-id
-      root (roots at 0; every vertex reached);
+      root (roots at 0; every vertex reached): one :func:`bfs` flood
+      from all roots at once, each vertex reached only from its own
+      component's root;
     - ``pred(id, pred)`` — min-id parent for every non-root.
     """
+    from graphscope_spark.operators.traversal import HopFlood, min_id_parents
     from graphscope_spark.operators.wcc import wcc
 
     edges = graph.symmetrized_edges().select("src", "dst").persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    comp = wcc(graph)
-    roots = comp.select(F.col("comp").alias("id")).distinct()
-    state = roots.withColumn("depth", F.lit(0).cast("long"))
-    state = state.localCheckpoint(eager=True)
-    frontier = state
-    d = 0
-    while frontier.limit(1).count() > 0:
-        d += 1
-        cand = (
-            edges.join(frontier.withColumnRenamed("id", "src").select("src"),
-                       "src")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(state.select("id"), "id", "left_anti")
-            .withColumn("depth", F.lit(d).cast("long"))
-            .localCheckpoint(eager=True)
-        )
-        frontier = cand
-        state = state.unionByName(frontier).localCheckpoint(eager=True)
-    du = state.select(F.col("id").alias("src"), F.col("depth").alias("du"))
-    pred = (
-        edges.join(du, "src")
-        .join(state.withColumnRenamed("id", "dst"), "dst")
-        .where((F.col("du") + 1 == F.col("depth")))
-        .groupBy(F.col("dst").alias("id"))
-        .agg(F.min("src").alias("pred"))
-        .localCheckpoint(eager=True)
-    )
-    return edges, state, pred
+    roots = wcc(graph).select(F.col("comp").alias("id")).distinct()
+    flood = HopFlood(graph, roots, symmetrize=True)
+    depth = flood.run(flood.until_empty, sys.maxsize)
+    pred = min_id_parents(edges, depth).localCheckpoint(eager=True)
+    return edges, depth, pred
 
 
 def _tv_tables(graph: Graph):

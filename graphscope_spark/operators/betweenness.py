@@ -15,24 +15,117 @@ halved; ``normalized=True`` rescales by 1/((n-1)(n-2)) (directed) or
 counted (NetworkX default).
 
 Spark shape (SURVEY.md §4.1 frontier pattern, multi-source like the
-closeness flood): ALL sampled sources flood simultaneously — state is
-keyed (source, id), every superstep is ONE join of the frontier
-against the src-partitioned edge table plus ONE (source, dst)
-aggregation with map-side combine, regardless of how many sources are
-in flight.  The backward sweep reuses the per-level frontiers cached
-on the way down, so each level is one frontier-sized join, not an
-O(V·S) scan.  Exact for the given sources; sampling sources is the
-standard scale play (Brandes-Pich) — each source's contribution is
-exact, so a DuckDB oracle over the same source set matches bit rows.
+``apsp_lengths`` flood): ALL sampled sources flood simultaneously —
+the state is keyed (source, id), and every forward superstep is ONE
+join of the depth-k frontier against the src-partitioned edge table
+plus ONE (source, dst) aggregation with map-side combine, regardless
+of how many sources are in flight.  One backward sweep then finalizes
+delta one depth at a time from the level below; the vertex variant
+sums it, the edge variant reads its per-edge term off the final
+deltas in one post-pass join.  Both sweeps run on
+``plans.superstep.run``.  Exact for the given sources; sampling
+sources is the standard scale play (Brandes-Pich) — each source's
+contribution is exact, so a DuckDB oracle over the same source set
+matches bit rows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import Graph
 from graphscope_spark.plans import superstep
+
+
+def _brandes(graph: Graph, sources: DataFrame | None, max_depth: int):
+    """The Brandes sweeps both variants share.  Returns ``(edges, n,
+    dag)``: ``edges`` is the (src, dst) table the sweeps walked and
+    ``dag(source, id, depth, sigma, delta)`` holds every vertex each
+    source reached, with its BFS depth, shortest-path count and
+    dependency.
+
+    Both sweeps run on ``superstep.run``.  The forward one adds depth
+    ``k + 1`` at superstep ``k``, summing ``sigma`` over the depth-k
+    in-neighbors; the backward one finalizes depth ``maxd - 1 - k``
+    from the deltas one level below."""
+    spark = graph.vertices.sparkSession
+    edges = (graph.edges if graph.directed else graph.symmetrized_edges()).select(
+        "src", "dst"
+    )
+    if graph.num_partitions:
+        edges = edges.repartition(graph.num_partitions, "src")
+    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    n = graph.vertices.count()
+    # each step unions one level onto the state: coalesced back, or
+    # the partition count grows with the depth
+    parts = graph.num_partitions or int(
+        spark.conf.get("spark.sql.shuffle.partitions"))
+
+    seeds = graph.vertices if sources is None else sources
+    src = F.col(seeds.columns[0]).cast("long")
+    depth = F.col("depth")
+    level: list[int] = [0]  # the depth the last forward step reached
+
+    def forward(state: DataFrame, k: int) -> DataFrame:
+        level[0] = k + 1
+        cand = (
+            edges.join(
+                state.where(depth == k)
+                .select("source", F.col("id").alias("src"), "sigma"),
+                "src")
+            .groupBy("source", F.col("dst").alias("id"))
+            .agg(F.sum("sigma").alias("sigma"))
+            .join(state.select("source", "id"), ["source", "id"], "left_anti")
+            .withColumn("depth", F.lit(k + 1).cast("long"))
+        )
+        return state.unionByName(cand).coalesce(parts)
+
+    def reached(new: DataFrame, old: DataFrame):
+        frontier = new.where(depth == level[0]).count()
+        return {"frontier": float(frontier)}, frontier == 0
+
+    sigma = superstep.run(
+        spark, "betweenness",
+        lambda: seeds.select(src.alias("source"), src.alias("id"),
+                             F.lit(0).cast("long").alias("depth"),
+                             F.lit(1.0).alias("sigma")),
+        forward, reached, max_depth,
+    )
+    maxd = sigma.agg(F.max("depth")).collect()[0][0] or 0
+
+    def backward(state: DataFrame, k: int) -> DataFrame:
+        d = maxd - 1 - k
+        # delta(v) = Σ_{v→w, depth(w) = d+1} sigma_v/sigma_w · (1 + delta_w)
+        contrib = (
+            state.where(depth == d + 1)
+            .select("source", F.col("id").alias("dst"),
+                    (F.lit(1.0) + F.col("delta")).alias("t"),
+                    F.col("sigma").alias("sigma_w"))
+            .join(edges, "dst")
+            .select("source", F.col("src").alias("id"), "t", "sigma_w")
+            .join(sigma.where(depth == d)
+                  .select("source", "id", F.col("sigma").alias("sigma_v")),
+                  ["source", "id"])
+            .groupBy("source", "id")
+            .agg(F.sum(F.col("sigma_v") / F.col("sigma_w") * F.col("t"))
+                 .alias("contrib"))
+        )
+        lvl = (
+            sigma.where(depth == d)
+            .join(contrib, ["source", "id"], "left")
+            .select("source", "id", "depth", "sigma",
+                    F.coalesce("contrib", F.lit(0.0)).alias("delta"))
+        )
+        return state.unionByName(lvl).coalesce(parts)
+
+    dag = superstep.run(
+        spark, "betweenness",
+        lambda: sigma.where(depth == maxd).withColumn("delta", F.lit(0.0)),
+        backward, superstep.fixed_rounds, maxd,
+    )
+    return edges, n, dag
 
 
 def edge_betweenness_centrality(
@@ -43,137 +136,53 @@ def edge_betweenness_centrality(
 ) -> DataFrame:
     """``(src long, dst long, eb double)`` — Brandes EDGE betweenness
     (NetworkX ``edge_betweenness_centrality`` semantics; the edge
-    analog of ``apps/centrality/betweenness``): the backward sweep's
-    per-edge term ``sigma_v/sigma_w · (1 + delta_w)`` IS the edge's
-    dependency, so this reuses the exact vertex machinery and emits
-    the per-level edge contributions before they are summed onto
-    vertices.  Undirected edges are reported once (src < dst), the
-    two-orientation double-count halved; ``normalized`` rescales by
-    1/(n(n-1)) (directed) i.e. the raw sum, matching NetworkX."""
-    with superstep.aqe_scope(graph.vertices.sparkSession, "betweenness"):
-        directed = graph.directed
-        edges, n, levels = _forward_sigma_levels(graph, sources, max_depth)
-
-        spark = graph.vertices.sparkSession
-        maxd = len(levels) - 1
-        edge_parts: list[DataFrame] = []
-        delta = None
-        if maxd >= 1:
-            delta = levels[maxd].withColumn("delta", F.lit(0.0))
-        for d in range(maxd, 0, -1):
-            per_edge = (
-                delta.withColumnRenamed("id", "dst")
-                .join(edges, "dst")
-                .select(
-                    "source", F.col("src").alias("v"), F.col("dst").alias("w"),
-                    (F.lit(1.0) + F.col("delta")).alias("t"),
-                    F.col("sigma").alias("sigma_w"),
-                )
-                .join(
-                    levels[d - 1].select(
-                        "source", F.col("id").alias("v"),
-                        F.col("sigma").alias("sigma_v"),
-                    ),
-                    ["source", "v"],
-                )
-                .select(
-                    "source", "v", "w",
-                    (F.col("sigma_v") / F.col("sigma_w") * F.col("t")).alias("c"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            edge_parts.append(per_edge)
-            contrib = per_edge.groupBy("source", F.col("v").alias("id")).agg(
-                F.sum("c").alias("contrib")
-            )
-            delta = (
-                levels[d - 1]
-                .join(contrib, ["source", "id"], "left")
-                .select(
-                    "source", "id", "sigma",
-                    F.coalesce("contrib", F.lit(0.0)).alias("delta"),
-                )
-                .localCheckpoint(eager=True)
-            )
-
-        # canonical edge set: every graph edge appears in the output, with
-        # eb = 0.0 for edges no sampled shortest path crosses (NetworkX
-        # reports those as 0.0, not absent)
-        if directed:
-            canon = edges.distinct()
-        else:
-            canon = edges.select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
-            ).distinct()
-        if not edge_parts:
-            return canon.withColumn("eb", F.lit(0.0))
-        acc = edge_parts[0]
-        for p in edge_parts[1:]:
-            acc = acc.unionByName(p)
-        if directed:
-            pairs = acc.select(F.col("v").alias("src"),
-                               F.col("w").alias("dst"), "c")
-            scale = 1.0
-        else:
-            pairs = acc.select(
-                F.least("v", "w").alias("src"),
-                F.greatest("v", "w").alias("dst"), "c",
-            )
-            scale = 0.5
-        if normalized and n > 1:
-            # NetworkX: 1/(n(n-1)) directed; 2/(n(n-1)) undirected applied
-            # to the HALVED sum — both reduce to 1/(n(n-1)) of the raw sum
-            scale = 1.0 / float(n * (n - 1))
-        scored = pairs.groupBy("src", "dst").agg(
-            (F.sum("c") * scale).alias("eb")
-        )
-        return canon.join(scored, ["src", "dst"], "left").select(
-            "src", "dst", F.coalesce("eb", F.lit(0.0)).alias("eb")
-        )
-
-
-def _forward_sigma_levels(
-    graph: Graph, sources: DataFrame | None, max_depth: int
-):
-    """Shared Brandes forward sweep (previously copy-pasted between
-    the vertex and edge variants): per-source BFS levels with
-    shortest-path counts.  Returns ``(edges, n, levels)`` where
-    ``levels[d]`` holds ``(source, id, sigma)`` for depth-d vertices.
-    """
+    analog of ``apps/centrality/betweenness``): the per-edge term
+    ``sigma_v/sigma_w · (1 + delta_w)`` of the backward sweep IS the
+    edge's dependency, so one post-pass join over the shared sweep's
+    final deltas gives it for every DAG edge v→w (depth(w) =
+    depth(v) + 1).  Undirected edges are reported once (src < dst),
+    the two-orientation double-count halved; ``normalized`` rescales
+    by 1/(n(n-1)) (directed) i.e. the raw sum, matching NetworkX."""
     directed = graph.directed
-    edges = (graph.edges if directed else graph.symmetrized_edges()).select(
-        "src", "dst"
+    edges, n, dag = _brandes(graph, sources, max_depth)
+    per_edge = (
+        dag.select("source", F.col("id").alias("src"),
+                   F.col("depth").alias("dv"), F.col("sigma").alias("sigma_v"))
+        .join(edges, "src")
+        .join(dag.select("source", F.col("id").alias("dst"),
+                         F.col("depth").alias("dw"),
+                         F.col("sigma").alias("sigma_w"), "delta"),
+              ["source", "dst"])
+        .where(F.col("dw") == F.col("dv") + 1)
+        .select("src", "dst",
+                (F.col("sigma_v") / F.col("sigma_w")
+                 * (F.lit(1.0) + F.col("delta"))).alias("c"))
     )
-    if graph.num_partitions:
-        edges = edges.repartition(graph.num_partitions, "src")
-    edges = edges.localCheckpoint(eager=True)
-    n = graph.vertices.count()
-
-    seeds = graph.vertices if sources is None else sources
-    seeds = seeds.select(F.col(seeds.columns[0]).cast("long").alias("source"))
-
-    lv0 = seeds.select(
-        "source", F.col("source").alias("id"), F.lit(1.0).alias("sigma")
-    ).localCheckpoint(eager=True)
-    levels: list[DataFrame] = [lv0]
-    visited = lv0.select("source", "id").localCheckpoint(eager=True)
-    for _ in range(max_depth):
-        front = levels[-1]
-        cand = (
-            edges.join(front.withColumnRenamed("id", "src"), "src")
-            .groupBy("source", F.col("dst").alias("id"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .join(visited, ["source", "id"], "left_anti")
-            .localCheckpoint(eager=True)
+    # canonical edge set: every graph edge appears in the output, with
+    # eb = 0.0 for edges no sampled shortest path crosses (NetworkX
+    # reports those as 0.0, not absent)
+    if directed:
+        canon = edges.distinct()
+        pairs = per_edge
+        scale = 1.0
+    else:
+        canon = edges.select(
+            F.least("src", "dst").alias("src"),
+            F.greatest("src", "dst").alias("dst"),
+        ).distinct()
+        pairs = per_edge.select(
+            F.least("src", "dst").alias("src"),
+            F.greatest("src", "dst").alias("dst"), "c",
         )
-        if cand.limit(1).count() == 0:
-            break
-        levels.append(cand)
-        visited = visited.unionByName(
-            cand.select("source", "id")
-        ).localCheckpoint(eager=True)
-    return edges, n, levels
+        scale = 0.5
+    if normalized and n > 1:
+        # NetworkX: 1/(n(n-1)) directed; 2/(n(n-1)) undirected applied
+        # to the HALVED sum — both reduce to 1/(n(n-1)) of the raw sum
+        scale = 1.0 / float(n * (n - 1))
+    scored = pairs.groupBy("src", "dst").agg((F.sum("c") * scale).alias("eb"))
+    return canon.join(scored, ["src", "dst"], "left").select(
+        "src", "dst", F.coalesce("eb", F.lit(0.0)).alias("eb")
+    )
 
 
 def betweenness_centrality(
@@ -184,69 +193,22 @@ def betweenness_centrality(
 ) -> DataFrame:
     """``(id long, bc double)`` — Brandes betweenness accumulated over
     ``sources`` (all vertices when None; pass a sample for large
-    graphs).  Directedness follows ``graph.directed``.  AQE pinned off
-    for the two sweeps (fixed-shape levels; see ``plans.superstep``)."""
-    with superstep.aqe_scope(graph.vertices.sparkSession, "betweenness"):
-        directed = graph.directed
-        # forward: BFS levels with shortest-path counts (shared sweep)
-        edges, n, levels = _forward_sigma_levels(graph, sources, max_depth)
-
-        # ---- backward: dependency accumulation level by level ----------
-        spark = graph.vertices.sparkSession
-        maxd = len(levels) - 1
-        deltas: list[DataFrame | None] = [None] * (maxd + 1)
-        if maxd >= 1:
-            deltas[maxd] = levels[maxd].withColumn("delta", F.lit(0.0))
-        for d in range(maxd, 0, -1):
-            lw = deltas[d]
-            contrib = (
-                lw.withColumnRenamed("id", "dst")
-                .join(edges, "dst")
-                .select(
-                    "source", F.col("src").alias("id"),
-                    (F.lit(1.0) + F.col("delta")).alias("t"),
-                    F.col("sigma").alias("sigma_w"),
-                )
-                .join(
-                    levels[d - 1].withColumnRenamed("sigma", "sigma_v"),
-                    ["source", "id"],
-                )
-                .groupBy("source", "id")
-                .agg(
-                    F.sum(F.col("sigma_v") / F.col("sigma_w") * F.col("t")).alias(
-                        "contrib"
-                    )
-                )
-            )
-            deltas[d - 1] = (
-                levels[d - 1]
-                .join(contrib, ["source", "id"], "left")
-                .select(
-                    "source", "id", "sigma",
-                    F.coalesce("contrib", F.lit(0.0)).alias("delta"),
-                )
-                .localCheckpoint(eager=True)
-            )
-
-        # bc(v) = Σ_sources delta(v) over levels ≥ 1 (v ≠ source)
-        non_source = [deltas[d].select("id", "delta") for d in range(1, maxd + 1)]
-        if non_source:
-            acc = non_source[0]
-            for p in non_source[1:]:
-                acc = acc.unionByName(p)
-            sums = acc.groupBy("id").agg(F.sum("delta").alias("b"))
-        else:
-            sums = spark.createDataFrame([], "id long, b double")
-        # NetworkX rescale: normalized applies 1/((n-1)(n-2)) to the raw
-        # (unhalved) sum — equivalently "2/((n-1)(n-2))" on the halved
-        # undirected value; unnormalized undirected halves the double-count
-        if normalized and n > 2:
-            scale = 1.0 / float((n - 1) * (n - 2))
-        else:
-            scale = 1.0 if directed else 0.5
-        return (
-            graph.vertices.select("id")
-            .join(sums, "id", "left")
-            .select("id", (F.coalesce("b", F.lit(0.0)) * scale).alias("bc"))
-        )
-
+    graphs).  Directedness follows ``graph.directed``; bc(v) is the
+    sum of delta(v) over the sources v is not (depth ≥ 1)."""
+    _, n, dag = _brandes(graph, sources, max_depth)
+    sums = (
+        dag.where(F.col("depth") >= 1)
+        .groupBy("id").agg(F.sum("delta").alias("b"))
+    )
+    # NetworkX rescale: normalized applies 1/((n-1)(n-2)) to the raw
+    # (unhalved) sum — equivalently "2/((n-1)(n-2))" on the halved
+    # undirected value; unnormalized undirected halves the double-count
+    if normalized and n > 2:
+        scale = 1.0 / float((n - 1) * (n - 2))
+    else:
+        scale = 1.0 if graph.directed else 0.5
+    return (
+        graph.vertices.select("id")
+        .join(sums, "id", "left")
+        .select("id", (F.coalesce("b", F.lit(0.0)) * scale).alias("bc"))
+    )

@@ -30,7 +30,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import Graph
 from graphscope_spark.plans import superstep
@@ -239,6 +238,23 @@ def hits(
         return cuts.keep(result)
 
 
+def _incoming_hops(graph: Graph, sources: DataFrame | None) -> DataFrame:
+    """``(source, id, dist long)``: the hop distance from every
+    reacher ``id`` TO ``source`` — one ``apsp_lengths`` flood along
+    the reversed edges (directed) or the symmetrized ones (undirected).
+    The flood from ``source`` visits exactly the vertices with a path
+    to it, itself at 0."""
+    from graphscope_spark.operators.traversal import apsp_lengths
+
+    if graph.directed:
+        rev = Graph.from_edges(
+            graph.reversed_edges(), directed=True,
+            vertices=graph.vertices, num_partitions=graph.num_partitions,
+        )
+        return apsp_lengths(rev, sources=sources)
+    return apsp_lengths(graph, sources=sources, symmetrize=True)
+
+
 def harmonic_centrality(
     graph: Graph, sources: DataFrame | None = None
 ) -> DataFrame:
@@ -248,19 +264,8 @@ def harmonic_centrality(
     incoming-path distances).  Rides the same multi-source BFS flood
     as closeness/APSP; pass ``sources`` for a sample (exact for those
     vertices)."""
-    from graphscope_spark.operators.traversal import apsp_lengths
-
-    if graph.directed:
-        # incoming-path distances: flood along REVERSED edges
-        rev = Graph.from_edges(
-            graph.reversed_edges(), directed=True,
-            vertices=graph.vertices, num_partitions=graph.num_partitions,
-        )
-        d = apsp_lengths(rev, sources=sources)
-    else:
-        d = apsp_lengths(graph, sources=sources, symmetrize=True)
     hc = (
-        d.where(F.col("dist") > 0)
+        _incoming_hops(graph, sources).where(F.col("dist") > 0)
         .groupBy(F.col("source").alias("id"))
         .agg(F.sum(1.0 / F.col("dist")).alias("hc"))
     )
@@ -283,58 +288,20 @@ def closeness_centrality(
     """``(id long, cc double)`` — Wasserman-Faust closeness over
     incoming-path distances (NetworkX/reference semantics).
 
-    Computed by multi-source BFS flooding: state (id, source, dist)
-    seeded with every vertex at dist 0, expanded until fixpoint.  This
-    is O(n·m) worst-case — the reference pays the same; for large
-    graphs pass ``sources`` to flood only a sample (each source's
-    flood is independent, so the sample is exact for those vertices).
-    AQE stays ON here: the flood's growing state union + distinct
-    benefits heavily from runtime coalesce (A/B-measured ~7x FASTER
-    with AQE at sf0.01 — the opposite of the fixed-shape frontier
-    loops; see ``plans.superstep``).
+    The distances come from the multi-source BFS flood harmonic
+    centrality rides (``apsp_lengths``), seeded with every vertex at
+    dist 0.  This is O(n·m) worst-case — the reference pays the same;
+    for large graphs pass ``sources`` to flood only a sample (each
+    source's flood is independent, so the sample is exact for those
+    vertices).  The flood runs with AQE off, inside
+    ``multi_source_sssp`` (see ``plans.superstep``).
     """
-    return _closeness_loop(graph, wf_improved, sources)
-
-
-def _closeness_loop(graph, wf_improved, sources):
-    # distances along REVERSED edges give incoming-path distances
-    edges = (
-        graph.reversed_edges() if graph.directed else graph.symmetrized_edges()
-    ).select("src", "dst").localCheckpoint(eager=True)
     n = graph.vertices.count()
-    seeds = graph.vertices if sources is None else sources.select(
-        F.col(sources.columns[0]).alias("id")
-    )
-    state = seeds.select(
-        F.col("id").alias("source"), F.col("id"), F.lit(0).cast("long").alias("dist")
-    ).localCheckpoint(eager=True)
-    frontier = state
-    depth = 0
-    while frontier.limit(1).count() > 0:
-        depth += 1
-        cand = (
-            edges.join(
-                frontier.select(F.col("source"), F.col("id").alias("src")), "src"
-            )
-            .select("source", F.col("dst").alias("id"))
-            .distinct()
-            .join(state.select("source", "id"), ["source", "id"], "left_anti")
-            .withColumn("dist", F.lit(depth).cast("long"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        state = (
-            state.unionByName(cand)
-            .localCheckpoint(eager=True)
-            if depth % 4 == 0
-            else state.unionByName(cand).persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        frontier = cand
-    # the flood from origin v along reversed edges visits exactly the
-    # vertices with a path TO v, at their distance-to-v — so group by
-    # the flood origin: r = |reachers|+1 (incl. self), total = Σ dist
-    per_v = state.groupBy(F.col("source").alias("id")).agg(
-        F.count(F.lit(1)).alias("r"), F.sum("dist").alias("total")
-    )
+    # group by the flood origin: r = |reachers|+1 (incl. self),
+    # total = Σ dist
+    per_v = _incoming_hops(graph, sources).groupBy(
+        F.col("source").alias("id")
+    ).agg(F.count(F.lit(1)).alias("r"), F.sum("dist").alias("total"))
     if wf_improved:
         cc = F.when(
             F.col("total") > 0,

@@ -290,12 +290,22 @@ def core_numbers_hindex(graph: Graph, max_iter: int = 200) -> DataFrame:
     where H is the h-index of the neighbor multiset; the fixpoint is
     exactly the core number of every vertex.
 
-    Unlike the k-peel (``core_numbers``, sequential in the degeneracy
-    — one distributed fixpoint loop PER k), this is a single
+    Unlike a k-peel (sequential in the degeneracy — one distributed
+    fixpoint loop PER k), this is a single
     superstep loop: each round is one edge join plus a per-vertex
     window h-index, and every vertex converges simultaneously.  The
     right 100×-scale formulation (rounds observed ≲ graph diameter).
     """
+    return _hindex(graph, max_iter, None)
+
+
+def _hindex(graph: Graph, max_iter: int, cap: int | None) -> DataFrame:
+    """The h-operator fixpoint, every value clipped at ``cap`` when
+    given: ``H(min(h, K)) = min(H(h), K)``, so the clipped iteration
+    reaches ``min(core, K)``, in no more rounds than the full one."""
+    def clip(c):
+        return c if cap is None else F.least(c, F.lit(cap).cast("long"))
+
     edges = graph.symmetrized_edges().select("src", "dst").persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -307,7 +317,7 @@ def core_numbers_hindex(graph: Graph, max_iter: int = 200) -> DataFrame:
     state = (
         graph.vertices.select("id")
         .join(deg, "id", "left")
-        .select("id", F.coalesce("h", F.lit(0).cast("long")).alias("h"))
+        .select("id", clip(F.coalesce("h", F.lit(0).cast("long"))).alias("h"))
         .localCheckpoint(eager=True)
     )
     for _ in range(max_iter):
@@ -319,7 +329,7 @@ def core_numbers_hindex(graph: Graph, max_iter: int = 200) -> DataFrame:
         hnew = (
             nb.withColumn("r", F.row_number().over(w).cast("long"))
             .groupBy("id")
-            .agg(F.max(F.least("r", F.col("h"))).alias("h"))
+            .agg(clip(F.max(F.least("r", F.col("h")))).alias("h"))
         )
         nxt = (
             state.withColumnRenamed("h", "old")
@@ -339,49 +349,11 @@ def core_numbers_hindex(graph: Graph, max_iter: int = 200) -> DataFrame:
 
 
 def core_numbers(graph: Graph, max_k: int | None = None) -> DataFrame:
-    """``(id long, core long)`` — full core decomposition by repeated
-    peeling with increasing k (degeneracy-bounded).
-
-    Kept as the simple reference implementation and for bounded-k
-    helpers; prefer :func:`core_numbers_hindex` — this one runs a
-    distributed fixpoint PER k value, sequential in the degeneracy."""
-    edges = graph.symmetrized_edges().select("src", "dst").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    spark = graph.vertices.sparkSession
-    result = graph.vertices.select("id", F.lit(0).cast("long").alias("core"))
-    alive = edges
-    k = 1
-    while True:
-        if max_k is not None and k > max_k:
-            break
-        # peel at level k to fixpoint
-        while True:
-            deg = alive.groupBy(F.col("src").alias("id")).agg(
-                F.count(F.lit(1)).alias("d")
-            )
-            keep = deg.where(F.col("d") >= k).select("id").localCheckpoint(
-                eager=True
-            )
-            nxt = (
-                alive.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
-                .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
-                .localCheckpoint(eager=True)
-            )
-            if nxt.count() == alive.count():
-                break
-            alive = nxt
-        survivors = alive.select(F.col("src").alias("id")).distinct()
-        if survivors.limit(1).count() == 0:
-            break
-        result = (
-            result.join(survivors.withColumn("k", F.lit(k).cast("long")), "id", "left")
-            .select("id", F.coalesce("k", F.col("core")).alias("core"))
-            .localCheckpoint(eager=True)
-        )
-        k += 1
-    _ = spark  # session kept for symmetry with other apps
-    return result
+    """``(id long, core long)`` — the core decomposition of
+    :func:`core_numbers_hindex`, clipped at ``max_k`` when given: a
+    peel run up to k = ``max_k`` assigns ``min(core, max_k)`` by
+    definition."""
+    return _hindex(graph, 200, None if max_k is None else max(max_k, 0))
 
 
 def onion_layers(graph: Graph, max_iter: int = 10_000) -> DataFrame:

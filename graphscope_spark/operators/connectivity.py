@@ -17,10 +17,12 @@ transitive-closure SQL oracle comparable row-for-row.
 
 Spark shape: every step is a frontier- or degree-style join over the
 live edge set; each fixpoint round is one join + one map-combined
-aggregation.  Each round's frames are read several times, so they are
-``localCheckpoint``-ed every round rather than on the cut schedule of
-``plans.superstep`` (the iterative-plan-growth OOM documented in
-SURVEY §4).  On web graphs
+aggregation.  The pivot reach (3) is one ``multi_source_sssp`` hop
+flood keyed by pivot over the edges inside a color class, on the
+superstep driver.  The trim and color rounds read their frames
+several times, so they are ``localCheckpoint``-ed every round rather
+than on the cut schedule of ``plans.superstep`` (the
+iterative-plan-growth OOM documented in SURVEY §4).  On web graphs
 trim kills the huge DAG-like periphery in a few rounds and coloring
 handles the giant SCC in O(diameter) rounds — the known scalable
 decomposition for power-law digraphs.
@@ -32,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import Graph
+from graphscope_spark.operators.traversal import multi_source_sssp
 
 
 def _not_empty(df: DataFrame) -> bool:
@@ -112,28 +115,26 @@ def scc(graph: Graph, max_outer: int = 1_000) -> DataFrame:
                 break
 
         # ---- 3. pivot reach within the color class -----------------
-        members = color.where(F.col("id") == F.col("color")).select(
-            F.col("color"), F.col("id")
-        ).localCheckpoint(eager=True)
-        frontier = members
-        while _not_empty(frontier):
-            cand = (
-                active_e.join(
-                    frontier.select(F.col("color"),
-                                    F.col("id").alias("src")), "src")
-                .select("color", F.col("dst").alias("id"))
-                .distinct()
-                .join(
-                    color.withColumnRenamed("color", "c2"), "id")
-                .where(F.col("color") == F.col("c2"))
-                .select("color", "id")
-                .join(members, ["color", "id"], "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            members = members.unionByName(cand).localCheckpoint(eager=True)
-            frontier = cand
-        found = members.select("id", F.col("color").alias("scc"))
-        results.append(found.localCheckpoint(eager=True))
+        # one hop flood keyed by pivot over the edges that stay inside
+        # a color class: the SCC of pivot c is what c reaches there
+        same = (
+            active_e.join(color.select(F.col("id").alias("src"),
+                                       F.col("color").alias("cs")), "src")
+            .join(color.select(F.col("id").alias("dst"),
+                               F.col("color").alias("cd")), "dst")
+            .where(F.col("cs") == F.col("cd"))
+            .select("src", "dst")
+        )
+        reach = multi_source_sssp(
+            Graph.from_edges(same, vertices=active_v,
+                             num_partitions=graph.num_partitions),
+            color.where(F.col("id") == F.col("color")).select("id"),
+            weight_col="__hop__",
+        )
+        found = reach.select("id", F.col("source").alias("scc")).localCheckpoint(
+            eager=True
+        )
+        results.append(found)
 
         # ---- 4. peel the found SCCs off ----------------------------
         found_ids = found.select("id")

@@ -258,67 +258,49 @@ def k_center(graph: Graph, k: int = 3) -> DataFrame:
     center, and the farthest vertex (max (dis, id) — the reference's
     fragment-order tie-break made deterministic) becomes the next
     center.  Result is each vertex's hop distance to its nearest
-    center, the 2-approximation certificate for the k-center radius.
-    k sequential BFS floods; each superstep is the standard frontier
-    join."""
-    edges = graph.symmetrized_edges().select("src", "dst").persist(
-        StorageLevel.MEMORY_AND_DISK
+    center, the 2-approximation certificate for the k-center radius;
+    an empty graph gives an empty frame.  k sequential
+    :func:`~graphscope_spark.operators.traversal.bfs` floods, each
+    folded into the running min."""
+    from graphscope_spark.operators.traversal import (
+        bfs,
+        persisted_ids,
+        release,
     )
-    deg = edges.groupBy(F.col("src").alias("id")).agg(
+
+    if k < 1:
+        raise ValueError(f"k_center needs k >= 1, got {k}")
+    deg = graph.symmetrized_edges().groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("d")
     )
     first = (
         graph.vertices.select("id")
         .join(deg, "id", "left")
         .orderBy(F.desc(F.coalesce("d", F.lit(0))), F.desc("id"))
-        .limit(1).collect()[0]["id"]
+        .limit(1).collect()
     )
     dis = graph.vertices.select(
         "id", F.lit(KCENTER_INF).cast("long").alias("dis")
-    ).localCheckpoint(eager=True)
-    center = int(first)
-    spark = graph.vertices.sparkSession
-    for _ in range(k):
-        # BFS flood from the new center, folding into the running min
-        frontier = spark.createDataFrame(
-            [(center, 0)], "id long, hop long"
-        )
-        dis = (
-            dis.join(frontier.withColumnRenamed("hop", "h"), "id", "left")
-            .select("id", F.least("dis", F.coalesce("h", F.col("dis")))
-                    .alias("dis"))
+    )
+    if not first:
+        return dis
+    center = int(first[0]["id"])
+    keep = persisted_ids(graph.vertices.sparkSession)
+    for i in range(k):
+        hop = bfs(graph, center, symmetrize=True)
+        nxt = (
+            dis.join(hop, "id", "left")
+            .select("id", F.least("dis", F.coalesce("depth", "dis")).alias("dis"))
             .localCheckpoint(eager=True)
         )
-        hop = 0
-        while frontier.limit(1).count() > 0:
-            hop += 1
-            cand = (
-                edges.join(
-                    frontier.withColumnRenamed("id", "src").select("src"),
-                    "src",
-                )
-                .select(F.col("dst").alias("id"))
-                .distinct()
-                .withColumn("h", F.lit(hop).cast("long"))
-            )
-            nxt = (
-                dis.join(cand, "id", "left")
-                .select(
-                    "id",
-                    F.least("dis", F.coalesce("h", F.col("dis")))
-                    .alias("dis"),
-                    (F.coalesce("h", F.lit(KCENTER_INF))
-                     < F.col("dis")).alias("improved"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            frontier = nxt.where(F.col("improved")).select("id")
-            dis = nxt.select("id", "dis")
-        far = (
-            dis.orderBy(F.desc("dis"), F.desc("id")).limit(1).collect()[0]
-        )
-        center = int(far["id"])
-    return dis.select("id", "dis")
+        # the cut fold reads neither the flood nor the previous fold
+        release(hop, keep)
+        release(dis, keep)
+        dis = nxt
+        if i + 1 < k:
+            far = dis.orderBy(F.desc("dis"), F.desc("id")).limit(1).collect()
+            center = int(far[0]["id"])
+    return dis
 
 
 def min_vertex_cover_greedy(graph: Graph, max_iter: int = 10_000) -> DataFrame:

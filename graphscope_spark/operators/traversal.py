@@ -35,6 +35,89 @@ from graphscope_spark.plans import superstep
 from graphscope_spark.plans.checkpoint import CheckpointManager
 
 
+class HopFlood:
+    """The hop flood of :func:`bfs`, :func:`sssp_has_path` and the bcc
+    forest, on ``superstep.run``: the ``roots(id)`` start at depth 0,
+    and superstep ``k`` adds the unvisited out-neighbors of the
+    depth-``k`` frontier at depth ``k + 1``; ``frontier(state)``
+    selects the rows the latest step added.  Each vertex gets the
+    depth of its nearest root."""
+
+    def __init__(self, graph: Graph, roots: DataFrame, symmetrize: bool):
+        edges = (graph.symmetrized_edges() if symmetrize
+                 else graph.edges).select("src", "dst")
+        if graph.num_partitions:
+            edges = edges.repartition(graph.num_partitions, "src")
+        self.edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+        self.spark = graph.vertices.sparkSession
+        # a union concatenates partitions: coalesced back every step,
+        # or a depth-d state scans d times as many tasks
+        self.parts = graph.num_partitions or int(
+            self.spark.conf.get("spark.sql.shuffle.partitions"))
+        self.roots = roots
+        self.level = 0  # the depth the last step reached
+        self.first: DataFrame | None = None
+
+    def init(self) -> DataFrame:
+        return self.roots.select(F.col("id").cast("long"),
+                                 F.lit(0).cast("long").alias("depth"))
+
+    def step(self, state: DataFrame, k: int) -> DataFrame:
+        self.level = k + 1
+        # expand frontier; left_anti against visited keeps strict news
+        cand = (
+            self.edges.join(
+                state.where(F.col("depth") == k).select(F.col("id").alias("src")),
+                "src")
+            .select(F.col("dst").alias("id"))
+            .distinct()
+            .join(state.select("id"), "id", "left_anti")
+            .withColumn("depth", F.lit(k + 1).cast("long"))
+        )
+        new = state.unionByName(cand).coalesce(self.parts)
+        if k == 0:
+            self.first = new
+        return new
+
+    def frontier(self, state: DataFrame) -> DataFrame:
+        return state.where(F.col("depth") == self.level)
+
+    def until_empty(self, new: DataFrame, old: DataFrame):
+        """The action of a full flood: stop once a step adds nothing."""
+        n = self.frontier(new).count()
+        return {"frontier": float(n)}, n == 0
+
+    def run(self, action, max_iter: int,
+            checkpoint: CheckpointManager | None = None) -> DataFrame:
+        """The flood's last state.  The driver keeps the first step's
+        frame cached for a repeated call from the same roots; a flood
+        is run from many sources (``k_center``), so it is released."""
+        out = superstep.run(self.spark, "bfs", self.init, self.step, action,
+                            max_iter, checkpoint=checkpoint)
+        if self.first is not None:
+            self.first.unpersist()
+        return out
+
+
+def release(df: DataFrame, keep) -> None:
+    """Unpersist ``df`` and every lineage cut it reads whose RDD id is
+    not in ``keep`` (the ids persisted before the flood ran, from
+    ``getPersistentRDDs``): for a flood result that nothing reads
+    any more."""
+    df.unpersist()
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if (leaf.getClass().getSimpleName() == "LogicalRDD"
+                and leaf.rdd().id() not in keep):
+            leaf.rdd().unpersist(False)
+
+
+def persisted_ids(spark) -> set:
+    """The ids of the RDDs persisted now."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def bfs(
     graph: Graph,
     source: int,
@@ -46,39 +129,39 @@ def bfs(
     vertices only (reference golden convention ``p2p-31-BFS``).
     Superstep ``k`` expands the frontier ``depth == k``, so a resumed
     run re-reads its frontier from the committed state."""
-    edges = (graph.symmetrized_edges() if symmetrize else graph.edges).select(
-        "src", "dst"
+    flood = HopFlood(graph, _one_root(graph, source), symmetrize)
+    return flood.run(flood.until_empty,
+                     sys.maxsize if depth_limit is None else depth_limit,
+                     checkpoint)
+
+
+def _one_root(graph: Graph, source: int) -> DataFrame:
+    return graph.vertices.sparkSession.createDataFrame(
+        [(int(source),)], "id long")
+
+
+def hop_preds(edges: DataFrame, depth: DataFrame) -> DataFrame:
+    """``(id, pred)``: every edge ``pred → id`` of ``edges(src, dst)``
+    that lies on a shortest path, i.e. ``depth(pred) + 1 =
+    depth(id)`` in the hop-depth frame ``depth(id, depth)`` — the
+    full predecessor multiset of a BFS."""
+    du = depth.select(F.col("id").alias("src"), F.col("depth").alias("du"))
+    return (
+        edges.join(du, "src")
+        .join(depth.withColumnRenamed("id", "dst"), "dst")
+        .where(F.col("du") + 1 == F.col("depth"))
+        .select(F.col("dst").alias("id"), F.col("src").alias("pred"))
     )
-    if graph.num_partitions:
-        edges = edges.repartition(graph.num_partitions, "src")
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    spark = graph.vertices.sparkSession
-    level: list[int] = [0]  # the depth the last step reached
 
-    def step(state: DataFrame, k: int) -> DataFrame:
-        level[0] = k + 1
-        # expand frontier; left_anti against visited keeps strict news
-        cand = (
-            edges.join(
-                state.where(F.col("depth") == k).select(F.col("id").alias("src")),
-                "src")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(state.select("id"), "id", "left_anti")
-            .withColumn("depth", F.lit(k + 1).cast("long"))
-        )
-        return state.unionByName(cand)
 
-    def action(new: DataFrame, old: DataFrame):
-        frontier = new.where(F.col("depth") == level[0]).count()
-        return {"frontier": float(frontier)}, frontier == 0
-
-    return superstep.run(
-        spark, "bfs",
-        lambda: spark.createDataFrame([(int(source), 0)], "id long, depth long"),
-        step, action,
-        sys.maxsize if depth_limit is None else depth_limit,
-        checkpoint=checkpoint,
+def min_id_parents(edges: DataFrame, depth: DataFrame) -> DataFrame:
+    """``(id, pred)`` with ``pred(v) = min{u : u→v ∧ depth(u)+1 =
+    depth(v)}`` — the one BFS-tree convention of the engine (BFS tree
+    formats, the bcc forest, GIE ``shortestPath``): deterministic, so
+    a SQL oracle reproduces the tree exactly.  Depth-0 vertices (the
+    sources) get no row."""
+    return hop_preds(edges, depth).groupBy("id").agg(
+        F.min("pred").alias("pred")
     )
 
 
@@ -98,20 +181,13 @@ def bfs_tree(
     ``pred(v) = min{u : u→v ∧ depth(u)+1 = depth(v)}`` — the same
     min-id convention as ``sssp_path`` — so the tree is deterministic
     and exactly reproducible by a SQL oracle.  One post-pass join
-    after the depth fixpoint; no per-superstep pred bookkeeping."""
+    after the depth fixpoint (:func:`min_id_parents`); no
+    per-superstep pred bookkeeping."""
     depth = bfs(graph, source, depth_limit, symmetrize)
     e = (graph.symmetrized_edges() if symmetrize else graph.edges).select(
         "src", "dst"
     )
-    du = depth.select(F.col("id").alias("src"), F.col("depth").alias("du"))
-    tree = (
-        e.join(du, "src")
-        .join(depth.withColumnRenamed("id", "dst"), "dst")
-        .where((F.col("du") + 1 == F.col("depth"))
-               & (F.col("dst") != int(source)))
-        .groupBy(F.col("dst").alias("id"))
-        .agg(F.min("src").alias("pred"))
-    )
+    tree = min_id_parents(e, depth)
     if output_format == "edges":
         return tree.select(F.col("pred"), F.col("id"))
     if output_format == "predecessors":
@@ -238,50 +314,27 @@ def sssp_has_path(
 ) -> bool:
     """True iff a directed path source→target exists (reference
     ``apps/sssp/sssp_has_path.h`` (157 LoC): BFS over unweighted
-    reachability).  Frontier loop with early exit the superstep the
-    target is reached — never floods past the target's level."""
+    reachability).  The :func:`bfs` flood with its own action, which
+    stops the superstep the target is reached — never floods past the
+    target's level — or the frontier empties."""
     if int(source) == int(target):
         return True
-    edges = (graph.symmetrized_edges() if symmetrize else graph.edges).select(
-        "src", "dst"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    spark = graph.vertices.sparkSession
-    state = spark.createDataFrame([(int(source),)], "id long")
-    frontier = state
-    # a bool escapes this function, nothing lazy — every persisted
-    # frame can be released on ANY exit path (previously they all
-    # stayed in the block store until session end)
-    persisted: list[DataFrame] = [edges]
-    try:
-        for _ in range(max_iter):
-            cand = (
-                edges.join(
-                    frontier.withColumnRenamed("id", "src").select("src"),
-                    "src")
-                .select(F.col("dst").alias("id"))
-                .distinct()
-                .join(state, "id", "left_anti")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            persisted.append(cand)
-            # ONE action per superstep: frontier size + target-hit
-            row = cand.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.max((F.col("id") == int(target)).cast("int")).alias("hit"),
-            ).collect()[0]
-            if row["hit"]:
-                return True
-            if row["n"] == 0:
-                return False
-            state = state.unionByName(cand).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            persisted.append(state)
-            frontier = cand
-        return False
-    finally:
-        for f in persisted:
-            f.unpersist()
+    flood = HopFlood(graph, _one_root(graph, source), symmetrize)
+    hit: list[bool] = [False]
+
+    def action(new: DataFrame, old: DataFrame):
+        # ONE action per superstep: frontier size + target-hit
+        row = flood.frontier(new).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.max((F.col("id") == int(target)).cast("int")).alias("hit"),
+        ).collect()[0]
+        hit[0] = bool(row["hit"])
+        return {"frontier": float(row["n"])}, hit[0] or row["n"] == 0
+
+    # a bool escapes, nothing lazy: release every frame the flood left
+    keep = persisted_ids(flood.spark)
+    release(flood.run(action, max_iter), keep)
+    return hit[0]
 
 
 def multi_source_sssp(

@@ -40,11 +40,13 @@ repeated:
   multi_source_sssp, betweenness, kcore, msf, louvain, random walks —
   supersteps whose shuffle size is stable or shrinks predictably and
   whose skew is already guarded (salting, map-side combine,
-  co-partitioned joins).
-- AQE ON, i.e. the session's setting (1.4-7x faster than off): cdlp
+  co-partitioned joins).  Closeness, harmonic centrality and scc's
+  pivot reach flood through multi_source_sssp and the bcc forest
+  through bfs, so they run with AQE off too.
+- AQE ON, i.e. the session's setting (faster than off): cdlp
   (14.9 s → 43 s with AQE off: the label histogram shrinks as labels
-  converge and runtime coalesce wins), closeness, hits, eigenvector,
-  katz (dense |V|-state join chains).
+  converge and runtime coalesce wins), hits, eigenvector, katz (dense
+  |V|-state join chains).
 
 On the prebuilt-adjacency path (``jobs/pagerank_job.py``, 10-60M
 edges) the gap widens to ~10x: AQE's coalesce heuristic (~64 MB per

@@ -141,6 +141,21 @@ def test_closeness(spark):
     assert_close(got, want, tol=1e-09)
 
 
+def test_closeness_undirected_sample(spark):
+    import networkx as nx
+
+    vs, es = GRAPHS["p2p_like"]
+    g = make_graph(spark, vs, es, directed=False)
+    sample = [vs[0], vs[7], vs[31], vs[62], vs[-1]]
+    srcs = spark.createDataFrame([(v,) for v in sample], "id long")
+    got = df_to_dict(closeness_centrality(g, sources=srcs))
+    G = nx.Graph()
+    G.add_nodes_from(vs)
+    G.add_edges_from(es)
+    want = {v: nx.closeness_centrality(G, u=v) for v in sample}
+    assert_close(got, want, tol=1e-09)
+
+
 @pytest.mark.parametrize("k", [2, 3])
 def test_kcore(spark, k):
     vs, es = GRAPHS["p2p_like"]

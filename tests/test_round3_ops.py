@@ -46,11 +46,11 @@ def test_core_numbers_hindex_matches_networkx(spark, rand_graph):
     assert got == dict(nx.core_number(G))
 
 
-def test_core_numbers_hindex_matches_peel(spark, rand_graph):
-    g, _ = rand_graph
-    hi = {r["id"]: r["core"] for r in core_numbers_hindex(g).collect()}
-    peel = {r["id"]: r["core"] for r in core_numbers(g).collect()}
-    assert hi == peel
+def test_core_numbers_max_k_clips_networkx(spark, rand_graph):
+    g, G = rand_graph
+    for max_k in (2, 3):
+        got = {r["id"]: r["core"] for r in core_numbers(g, max_k).collect()}
+        assert got == {v: min(c, max_k) for v, c in nx.core_number(G).items()}
 
 
 @pytest.mark.parametrize("k", [3, 4, 5])
@@ -184,6 +184,25 @@ def test_k_center_matches_greedy(spark, rand_graph):
         center = max(G.nodes(), key=lambda i: (dis[i], i))
     got = {r["id"]: r["dis"] for r in k_center(g, 3).collect()}
     assert got == dis
+
+
+@pytest.mark.parametrize("k", [0, -1])
+def test_k_center_rejects_k_below_one(spark, rand_graph, k):
+    from graphscope_spark.operators.misc import k_center
+
+    with pytest.raises(ValueError, match="k >= 1"):
+        k_center(rand_graph[0], k)
+
+
+def test_k_center_empty_graph_is_empty(spark):
+    from graphscope_spark.operators.misc import k_center
+
+    g = Graph.from_edges(
+        spark.createDataFrame([], "src long, dst long"), directed=False,
+        vertices=spark.createDataFrame([], "id long"))
+    out = k_center(g, 3)
+    assert out.collect() == []
+    assert out.schema.simpleString() == "struct<id:bigint,dis:bigint>"
 
 
 def test_min_cover_matches_reference_protocol(spark, rand_graph):

@@ -8,7 +8,9 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from graphscope_spark.operators.betweenness import betweenness_centrality
 from graphscope_spark.operators.cdlp import cdlp
+from graphscope_spark.operators.misc import k_center
 from graphscope_spark.operators.pagerank import pagerank
 from graphscope_spark.operators.traversal import sssp
 from graphscope_spark.operators.wcc import wcc
@@ -129,16 +131,23 @@ def _held(spark, call):
                - before)
 
 
-@pytest.mark.parametrize("op", ["pagerank", "wcc", "cdlp", "sssp"])
+@pytest.mark.parametrize(
+    "op", ["pagerank", "wcc", "cdlp", "sssp", "betweenness", "k_center"])
 def test_held_blocks_do_not_grow_with_supersteps(spark, op):
     vs, es = gen_edges(n=80, m=400, seed=13)
     g = make_graph(spark, vs, es)
     path = _path(spark, 24)
+    first = spark.createDataFrame([(0,)], "id long")
     calls = {
         "pagerank": lambda r: pagerank(g, max_iter=r, tol=0.0),
         "wcc": lambda r: wcc(path, max_iter=r, pointer_jumping=False),
         "cdlp": lambda r: cdlp(g, max_round=r),
         "sssp": lambda r: sssp(path, 0, max_iter=r),
+        # r is the BFS depth of the Brandes sweeps, and the number of
+        # BFS floods k_center runs
+        "betweenness": lambda r: betweenness_centrality(
+            path, sources=first, max_depth=r),
+        "k_center": lambda r: k_center(path, r),
     }
     call = calls[op]
     _held(spark, lambda: call(1))  # warm the graph's own caches
