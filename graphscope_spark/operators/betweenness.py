@@ -36,28 +36,36 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import Graph
+from graphscope_spark.operators.traversal import persisted_ids, release
 from graphscope_spark.plans import superstep
 
 
-def _brandes(graph: Graph, sources: DataFrame | None, max_depth: int):
-    """The Brandes sweeps both variants share.  Returns ``(edges, n,
-    dag)``: ``edges`` is the (src, dst) table the sweeps walked and
-    ``dag(source, id, depth, sigma, delta)`` holds every vertex each
-    source reached, with its BFS depth, shortest-path count and
-    dependency.
+def _brandes(graph: Graph, sources: DataFrame | None, max_depth: int,
+             result) -> DataFrame:
+    """Run the Brandes sweeps both variants share and return
+    ``result(edges, sigma, dag)``, materialized: ``edges`` is the
+    (src, dst) table the sweeps walked, ``sigma(source, id, depth,
+    sigma)`` holds every vertex each source reached, with its BFS
+    depth and shortest-path count, and ``dag(source, id, depth,
+    sigma, delta)`` holds the rows of ``sigma`` past depth 0 with
+    their dependency (the sources alone when nothing is).
 
     Both sweeps run on ``superstep.run``.  The forward one adds depth
     ``k + 1`` at superstep ``k``, summing ``sigma`` over the depth-k
     in-neighbors; the backward one finalizes depth ``maxd - 1 - k``
-    from the deltas one level below."""
+    from the deltas one level below, down to depth 1: no variant
+    reads a source's own dependency.  Once the result is cut, every
+    frame the sweeps left persisted is released, the first step of
+    each sweep (which the driver keeps cached) included."""
     spark = graph.vertices.sparkSession
+    keep = persisted_ids(spark)
+    firsts: list[DataFrame] = []
     edges = (graph.edges if graph.directed else graph.symmetrized_edges()).select(
         "src", "dst"
     )
     if graph.num_partitions:
         edges = edges.repartition(graph.num_partitions, "src")
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    n = graph.vertices.count()
     # each step unions one level onto the state: coalesced back, or
     # the partition count grows with the depth
     parts = graph.num_partitions or int(
@@ -67,6 +75,11 @@ def _brandes(graph: Graph, sources: DataFrame | None, max_depth: int):
     src = F.col(seeds.columns[0]).cast("long")
     depth = F.col("depth")
     level: list[int] = [0]  # the depth the last forward step reached
+
+    def first(new: DataFrame, k: int) -> DataFrame:
+        if k == 0:
+            firsts.append(new)
+        return new
 
     def forward(state: DataFrame, k: int) -> DataFrame:
         level[0] = k + 1
@@ -80,20 +93,23 @@ def _brandes(graph: Graph, sources: DataFrame | None, max_depth: int):
             .join(state.select("source", "id"), ["source", "id"], "left_anti")
             .withColumn("depth", F.lit(k + 1).cast("long"))
         )
-        return state.unionByName(cand).coalesce(parts)
+        return first(state.unionByName(cand).coalesce(parts), k)
 
     def reached(new: DataFrame, old: DataFrame):
         frontier = new.where(depth == level[0]).count()
         return {"frontier": float(frontier)}, frontier == 0
 
+    stats: dict = {}
     sigma = superstep.run(
         spark, "betweenness",
         lambda: seeds.select(src.alias("source"), src.alias("id"),
                              F.lit(0).cast("long").alias("depth"),
                              F.lit(1.0).alias("sigma")),
-        forward, reached, max_depth,
+        forward, reached, max_depth, stats=stats,
     )
-    maxd = sigma.agg(F.max("depth")).collect()[0][0] or 0
+    # the last superstep added depth `rounds`, unless it added nothing
+    rounds = stats.get("rounds", 0)
+    maxd = rounds - 1 if stats.get("frontier") == 0 else rounds
 
     def backward(state: DataFrame, k: int) -> DataFrame:
         d = maxd - 1 - k
@@ -118,14 +134,17 @@ def _brandes(graph: Graph, sources: DataFrame | None, max_depth: int):
             .select("source", "id", "depth", "sigma",
                     F.coalesce("contrib", F.lit(0.0)).alias("delta"))
         )
-        return state.unionByName(lvl).coalesce(parts)
+        return first(state.unionByName(lvl).coalesce(parts), k)
 
     dag = superstep.run(
         spark, "betweenness",
         lambda: sigma.where(depth == maxd).withColumn("delta", F.lit(0.0)),
-        backward, superstep.fixed_rounds, maxd,
+        backward, superstep.fixed_rounds, max(maxd - 1, 0),
     )
-    return edges, n, dag
+    out = result(edges, sigma, dag).localCheckpoint(eager=True)
+    for df in (sigma, dag, *firsts):
+        release(df, keep)
+    return out
 
 
 def edge_betweenness_centrality(
@@ -144,45 +163,51 @@ def edge_betweenness_centrality(
     the two-orientation double-count halved; ``normalized`` rescales
     by 1/(n(n-1)) (directed) i.e. the raw sum, matching NetworkX."""
     directed = graph.directed
-    edges, n, dag = _brandes(graph, sources, max_depth)
-    per_edge = (
-        dag.select("source", F.col("id").alias("src"),
-                   F.col("depth").alias("dv"), F.col("sigma").alias("sigma_v"))
-        .join(edges, "src")
-        .join(dag.select("source", F.col("id").alias("dst"),
-                         F.col("depth").alias("dw"),
-                         F.col("sigma").alias("sigma_w"), "delta"),
-              ["source", "dst"])
-        .where(F.col("dw") == F.col("dv") + 1)
-        .select("src", "dst",
-                (F.col("sigma_v") / F.col("sigma_w")
-                 * (F.lit(1.0) + F.col("delta"))).alias("c"))
-    )
-    # canonical edge set: every graph edge appears in the output, with
-    # eb = 0.0 for edges no sampled shortest path crosses (NetworkX
-    # reports those as 0.0, not absent)
-    if directed:
-        canon = edges.distinct()
-        pairs = per_edge
-        scale = 1.0
-    else:
-        canon = edges.select(
-            F.least("src", "dst").alias("src"),
-            F.greatest("src", "dst").alias("dst"),
-        ).distinct()
-        pairs = per_edge.select(
-            F.least("src", "dst").alias("src"),
-            F.greatest("src", "dst").alias("dst"), "c",
-        )
-        scale = 0.5
-    if normalized and n > 1:
+    n = graph.vertices.count() if normalized else 0
+    if n > 1:
         # NetworkX: 1/(n(n-1)) directed; 2/(n(n-1)) undirected applied
         # to the HALVED sum — both reduce to 1/(n(n-1)) of the raw sum
         scale = 1.0 / float(n * (n - 1))
-    scored = pairs.groupBy("src", "dst").agg((F.sum("c") * scale).alias("eb"))
-    return canon.join(scored, ["src", "dst"], "left").select(
-        "src", "dst", F.coalesce("eb", F.lit(0.0)).alias("eb")
-    )
+    else:
+        scale = 1.0 if directed else 0.5
+
+    def result(edges: DataFrame, sigma: DataFrame, dag: DataFrame):
+        per_edge = (
+            sigma.select("source", F.col("id").alias("src"),
+                         F.col("depth").alias("dv"),
+                         F.col("sigma").alias("sigma_v"))
+            .join(edges, "src")
+            .join(dag.select("source", F.col("id").alias("dst"),
+                             F.col("depth").alias("dw"),
+                             F.col("sigma").alias("sigma_w"), "delta"),
+                  ["source", "dst"])
+            .where(F.col("dw") == F.col("dv") + 1)
+            .select("src", "dst",
+                    (F.col("sigma_v") / F.col("sigma_w")
+                     * (F.lit(1.0) + F.col("delta"))).alias("c"))
+        )
+        # canonical edge set: every graph edge appears in the output,
+        # with eb = 0.0 for edges no sampled shortest path crosses
+        # (NetworkX reports those as 0.0, not absent)
+        if directed:
+            canon = edges.distinct()
+            pairs = per_edge
+        else:
+            canon = edges.select(
+                F.least("src", "dst").alias("src"),
+                F.greatest("src", "dst").alias("dst"),
+            ).distinct()
+            pairs = per_edge.select(
+                F.least("src", "dst").alias("src"),
+                F.greatest("src", "dst").alias("dst"), "c",
+            )
+        scored = pairs.groupBy("src", "dst").agg(
+            (F.sum("c") * scale).alias("eb"))
+        return canon.join(scored, ["src", "dst"], "left").select(
+            "src", "dst", F.coalesce("eb", F.lit(0.0)).alias("eb")
+        )
+
+    return _brandes(graph, sources, max_depth, result)
 
 
 def betweenness_centrality(
@@ -195,20 +220,24 @@ def betweenness_centrality(
     ``sources`` (all vertices when None; pass a sample for large
     graphs).  Directedness follows ``graph.directed``; bc(v) is the
     sum of delta(v) over the sources v is not (depth ≥ 1)."""
-    _, n, dag = _brandes(graph, sources, max_depth)
-    sums = (
-        dag.where(F.col("depth") >= 1)
-        .groupBy("id").agg(F.sum("delta").alias("b"))
-    )
     # NetworkX rescale: normalized applies 1/((n-1)(n-2)) to the raw
     # (unhalved) sum — equivalently "2/((n-1)(n-2))" on the halved
     # undirected value; unnormalized undirected halves the double-count
-    if normalized and n > 2:
+    n = graph.vertices.count() if normalized else 0
+    if n > 2:
         scale = 1.0 / float((n - 1) * (n - 2))
     else:
         scale = 1.0 if graph.directed else 0.5
-    return (
-        graph.vertices.select("id")
-        .join(sums, "id", "left")
-        .select("id", (F.coalesce("b", F.lit(0.0)) * scale).alias("bc"))
-    )
+
+    def result(edges: DataFrame, sigma: DataFrame, dag: DataFrame):
+        sums = (
+            dag.where(F.col("depth") >= 1)
+            .groupBy("id").agg(F.sum("delta").alias("b"))
+        )
+        return (
+            graph.vertices.select("id")
+            .join(sums, "id", "left")
+            .select("id", (F.coalesce("b", F.lit(0.0)) * scale).alias("bc"))
+        )
+
+    return _brandes(graph, sources, max_depth, result)

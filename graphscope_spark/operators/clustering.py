@@ -23,6 +23,8 @@ inside the surviving vertex set.
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -352,8 +354,12 @@ def core_numbers(graph: Graph, max_k: int | None = None) -> DataFrame:
     """``(id long, core long)`` — the core decomposition of
     :func:`core_numbers_hindex`, clipped at ``max_k`` when given: a
     peel run up to k = ``max_k`` assigns ``min(core, max_k)`` by
-    definition."""
-    return _hindex(graph, 200, None if max_k is None else max(max_k, 0))
+    definition.  No round budget: the iteration stops when no value
+    changes, which it always reaches because h never increases (on a
+    path the h-operator moves one hop per round, so the middle of a
+    500-vertex path needs about 250 rounds)."""
+    return _hindex(graph, sys.maxsize,
+                   None if max_k is None else max(max_k, 0))
 
 
 def onion_layers(graph: Graph, max_iter: int = 10_000) -> DataFrame:

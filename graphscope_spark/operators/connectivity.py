@@ -17,12 +17,14 @@ transitive-closure SQL oracle comparable row-for-row.
 
 Spark shape: every step is a frontier- or degree-style join over the
 live edge set; each fixpoint round is one join + one map-combined
-aggregation.  The pivot reach (3) is one ``multi_source_sssp`` hop
-flood keyed by pivot over the edges inside a color class, on the
-superstep driver.  The trim and color rounds read their frames
-several times, so they are ``localCheckpoint``-ed every round rather
-than on the cut schedule of ``plans.superstep`` (the
-iterative-plan-growth OOM documented in SURVEY §4).  On web graphs
+aggregation.  The pivot reach (3) is one :func:`bfs` hop flood
+(``traversal.HopFlood``) from every pivot at once over the edges
+inside a color class: the classes are disjoint, so each vertex is
+reached only from its own pivot.  The trim and color rounds read
+their frames several times, so they are ``localCheckpoint``-ed every
+round rather than on the cut schedule of ``plans.superstep`` (the
+iterative-plan-growth OOM documented in SURVEY §4); every such cut is
+released once the result is materialized.  On web graphs
 trim kills the huge DAG-like periphery in a few rounds and coloring
 handles the giant SCC in O(diameter) rounds — the known scalable
 decomposition for power-law digraphs.
@@ -30,11 +32,17 @@ decomposition for power-law digraphs.
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import Graph
-from graphscope_spark.operators.traversal import multi_source_sssp
+from graphscope_spark.operators.traversal import (
+    HopFlood,
+    persisted_ids,
+    release,
+)
 
 
 def _not_empty(df: DataFrame) -> bool:
@@ -45,13 +53,19 @@ def scc(graph: Graph, max_outer: int = 1_000) -> DataFrame:
     """``(id long, scc long)`` — scc = min id of the vertex's strongly
     connected component."""
     spark = graph.vertices.sparkSession
-    active_e = (
+    keep = persisted_ids(spark)
+    cuts: list[DataFrame] = []
+
+    def cut(df: DataFrame) -> DataFrame:
+        cuts.append(df.localCheckpoint(eager=True))
+        return cuts[-1]
+
+    active_e = cut(
         graph.edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    active_v = graph.vertices.select("id").localCheckpoint(eager=True)
+    active_v = cut(graph.vertices.select("id"))
     results: list[DataFrame] = []
 
     for _ in range(max_outer):
@@ -59,22 +73,20 @@ def scc(graph: Graph, max_outer: int = 1_000) -> DataFrame:
         while True:
             srcs = active_e.select(F.col("src").alias("id")).distinct()
             dsts = active_e.select(F.col("dst").alias("id")).distinct()
-            keep = (
+            keep_v = cut(
                 active_v.join(srcs, "id", "left_semi")
                 .join(dsts, "id", "left_semi")
-                .localCheckpoint(eager=True)
             )
-            n_keep, n_active = keep.count(), active_v.count()
+            n_keep, n_active = keep_v.count(), active_v.count()
             if n_keep < n_active:
-                trivial = active_v.join(keep, "id", "left_anti")
+                trivial = active_v.join(keep_v, "id", "left_anti")
                 results.append(trivial.select("id", F.col("id").alias("scc")))
-                active_v = keep
-                active_e = (
-                    active_e.join(keep.withColumnRenamed("id", "src"),
+                active_v = keep_v
+                active_e = cut(
+                    active_e.join(keep_v.withColumnRenamed("id", "src"),
                                   "src", "left_semi")
-                    .join(keep.withColumnRenamed("id", "dst"),
+                    .join(keep_v.withColumnRenamed("id", "dst"),
                           "dst", "left_semi")
-                    .localCheckpoint(eager=True)
                 )
             if n_keep == n_active or n_keep == 0:
                 break
@@ -82,8 +94,7 @@ def scc(graph: Graph, max_outer: int = 1_000) -> DataFrame:
             break
 
         # ---- 2. color: min forward-reachable id to fixpoint --------
-        color = active_v.select("id", F.col("id").alias("color"))
-        color = color.localCheckpoint(eager=True)
+        color = cut(active_v.select("id", F.col("id").alias("color")))
         while True:
             # color flows AGAINST edge direction: v inherits the min
             # color of its out-neighbors (min id reachable forward)
@@ -94,14 +105,13 @@ def scc(graph: Graph, max_outer: int = 1_000) -> DataFrame:
                 .groupBy(F.col("src").alias("id"))
                 .agg(F.min("c").alias("mn"))
             )
-            nxt = (
+            nxt = cut(
                 color.join(msgs, "id", "left")
                 .select(
                     "id",
                     F.least("color", F.coalesce("mn", F.col("color"))
                             ).alias("color"),
                 )
-                .localCheckpoint(eager=True)
             )
             changed = (
                 nxt.withColumnRenamed("color", "nc")
@@ -115,8 +125,8 @@ def scc(graph: Graph, max_outer: int = 1_000) -> DataFrame:
                 break
 
         # ---- 3. pivot reach within the color class -----------------
-        # one hop flood keyed by pivot over the edges that stay inside
-        # a color class: the SCC of pivot c is what c reaches there
+        # one hop flood from every pivot over the edges that stay
+        # inside a color class: the SCC of pivot c is what c reaches
         same = (
             active_e.join(color.select(F.col("id").alias("src"),
                                        F.col("color").alias("cs")), "src")
@@ -125,35 +135,39 @@ def scc(graph: Graph, max_outer: int = 1_000) -> DataFrame:
             .where(F.col("cs") == F.col("cd"))
             .select("src", "dst")
         )
-        reach = multi_source_sssp(
+        flood = HopFlood(
             Graph.from_edges(same, vertices=active_v,
                              num_partitions=graph.num_partitions),
             color.where(F.col("id") == F.col("color")).select("id"),
-            weight_col="__hop__",
+            symmetrize=False,
         )
-        found = reach.select("id", F.col("source").alias("scc")).localCheckpoint(
-            eager=True
-        )
+        before = persisted_ids(spark)
+        reach = flood.run(flood.until_empty, sys.maxsize)
+        found = cut(reach.join(color, "id")
+                    .select("id", F.col("color").alias("scc")))
+        release(reach, before)
+        flood.edges.unpersist()
         results.append(found)
 
         # ---- 4. peel the found SCCs off ----------------------------
-        found_ids = found.select("id")
-        active_v = active_v.join(found_ids, "id", "left_anti").localCheckpoint(
-            eager=True
-        )
+        active_v = cut(active_v.join(found.select("id"), "id", "left_anti"))
         if not _not_empty(active_v):
             break
-        active_e = (
+        active_e = cut(
             active_e.join(active_v.withColumnRenamed("id", "src"),
                           "src", "left_semi")
             .join(active_v.withColumnRenamed("id", "dst"),
                   "dst", "left_semi")
-            .localCheckpoint(eager=True)
         )
 
-    if not results:
-        return spark.createDataFrame([], "id long, scc long")
-    acc = results[0]
-    for r in results[1:]:
-        acc = acc.unionByName(r)
-    return acc
+    if results:
+        acc = results[0]
+        for r in results[1:]:
+            acc = acc.unionByName(r)
+        out = acc.localCheckpoint(eager=True)
+    else:
+        out = spark.createDataFrame([], "id long, scc long")
+    # the result is materialized: no cut made on the way is read again
+    for c in cuts:
+        release(c, keep)
+    return out

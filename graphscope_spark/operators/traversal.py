@@ -104,7 +104,8 @@ def release(df: DataFrame, keep) -> None:
     not in ``keep`` (the ids persisted before the flood ran, from
     ``getPersistentRDDs``): for a flood result that nothing reads
     any more."""
-    df.unpersist()
+    if df.is_cached:  # an unpersist call scans every cached plan
+        df.unpersist()
     leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
     while leaves.hasNext():
         leaf = leaves.next()

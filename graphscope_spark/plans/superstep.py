@@ -40,9 +40,9 @@ repeated:
   multi_source_sssp, betweenness, kcore, msf, louvain, random walks —
   supersteps whose shuffle size is stable or shrinks predictably and
   whose skew is already guarded (salting, map-side combine,
-  co-partitioned joins).  Closeness, harmonic centrality and scc's
-  pivot reach flood through multi_source_sssp and the bcc forest
-  through bfs, so they run with AQE off too.
+  co-partitioned joins).  Closeness and harmonic centrality flood
+  through multi_source_sssp, and the bcc forest and scc's pivot
+  reach through bfs's flood, so they run with AQE off too.
 - AQE ON, i.e. the session's setting (faster than off): cdlp
   (14.9 s → 43 s with AQE off: the label histogram shrinks as labels
   converge and runtime coalesce wins), hits, eigenvector, katz (dense

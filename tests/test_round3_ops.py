@@ -4,11 +4,13 @@ BFS tree formats, FLASH greedy min-cover / min-dominating-set."""
 from __future__ import annotations
 
 import random
+import sys
 
 import networkx as nx
 import pytest
 
 from graphscope_spark.graph import Graph
+from graphscope_spark.operators import clustering
 from graphscope_spark.operators.clustering import (
     core_numbers,
     core_numbers_hindex,
@@ -51,6 +53,32 @@ def test_core_numbers_max_k_clips_networkx(spark, rand_graph):
     for max_k in (2, 3):
         got = {r["id"]: r["core"] for r in core_numbers(g, max_k).collect()}
         assert got == {v: min(c, max_k) for v, c in nx.core_number(G).items()}
+
+
+def test_core_numbers_runs_to_the_fixpoint(spark, monkeypatch):
+    """On a path the h-operator moves one hop per round, so the middle
+    of a long path reads core 2 until about n/2 rounds have run: a
+    result returned on a round budget is wrong there.  core_numbers
+    asks for no budget and stops only when nothing changes."""
+    n = 16
+    g = Graph.from_edges(
+        spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
+                              "src long, dst long"),
+        directed=False,
+        vertices=spark.createDataFrame([(i,) for i in range(n)], "id long"),
+        num_partitions=4,
+    )
+    budgets = []
+    hindex = clustering._hindex
+
+    def spy(graph, max_iter, cap):
+        budgets.append(max_iter)
+        return hindex(graph, max_iter, cap)
+
+    monkeypatch.setattr(clustering, "_hindex", spy)
+    got = {r["id"]: r["core"] for r in core_numbers(g, 3).collect()}
+    assert got == {i: 1 for i in range(n)}
+    assert budgets == [sys.maxsize]
 
 
 @pytest.mark.parametrize("k", [3, 4, 5])

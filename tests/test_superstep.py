@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from graphscope_spark.operators.betweenness import betweenness_centrality
 from graphscope_spark.operators.cdlp import cdlp
+from graphscope_spark.operators.connectivity import scc
 from graphscope_spark.operators.misc import k_center
 from graphscope_spark.operators.pagerank import pagerank
 from graphscope_spark.operators.traversal import sssp
@@ -122,6 +123,16 @@ def _path(spark, n):
                       directed=False)
 
 
+def _scc_chain(spark, m):
+    """m two-vertex SCCs {2j, 2j+1}, each with an edge into every lower
+    one: scc peels one of them per outer round, lowest first."""
+    return make_graph(
+        spark, range(2 * m),
+        [(2 * j, 2 * j + 1) for j in range(m)]
+        + [(2 * j + 1, 2 * j) for j in range(m)]
+        + [(2 * j, 2 * i) for j in range(m) for i in range(j)])
+
+
 def _held(spark, call):
     """RDDs a call leaves persisted once its result is collected."""
     rdds = spark.sparkContext._jsc.getPersistentRDDs()
@@ -132,11 +143,13 @@ def _held(spark, call):
 
 
 @pytest.mark.parametrize(
-    "op", ["pagerank", "wcc", "cdlp", "sssp", "betweenness", "k_center"])
+    "op",
+    ["pagerank", "wcc", "cdlp", "sssp", "betweenness", "k_center", "scc"])
 def test_held_blocks_do_not_grow_with_supersteps(spark, op):
     vs, es = gen_edges(n=80, m=400, seed=13)
     g = make_graph(spark, vs, es)
     path = _path(spark, 24)
+    chain = _scc_chain(spark, 10)
     first = spark.createDataFrame([(0,)], "id long")
     calls = {
         "pagerank": lambda r: pagerank(g, max_iter=r, tol=0.0),
@@ -148,6 +161,8 @@ def test_held_blocks_do_not_grow_with_supersteps(spark, op):
         "betweenness": lambda r: betweenness_centrality(
             path, sources=first, max_depth=r),
         "k_center": lambda r: k_center(path, r),
+        # r outer rounds, each with its own pivot flood
+        "scc": lambda r: scc(chain, max_outer=r),
     }
     call = calls[op]
     _held(spark, lambda: call(1))  # warm the graph's own caches
