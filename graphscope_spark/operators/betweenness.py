@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import Graph
-from graphscope_spark.operators.traversal import persisted_ids, release
 from graphscope_spark.plans import superstep
 
 
@@ -54,12 +53,10 @@ def _brandes(graph: Graph, sources: DataFrame | None, max_depth: int,
     ``k + 1`` at superstep ``k``, summing ``sigma`` over the depth-k
     in-neighbors; the backward one finalizes depth ``maxd - 1 - k``
     from the deltas one level below, down to depth 1: no variant
-    reads a source's own dependency.  Once the result is cut, every
-    frame the sweeps left persisted is released, the first step of
-    each sweep (which the driver keeps cached) included."""
+    reads a source's own dependency.  Each sweep returns the one soft
+    cut ``superstep.run`` ends on; both are freed with
+    ``superstep.release`` once the result is cut."""
     spark = graph.vertices.sparkSession
-    keep = persisted_ids(spark)
-    firsts: list[DataFrame] = []
     edges = (graph.edges if graph.directed else graph.symmetrized_edges()).select(
         "src", "dst"
     )
@@ -76,11 +73,6 @@ def _brandes(graph: Graph, sources: DataFrame | None, max_depth: int,
     depth = F.col("depth")
     level: list[int] = [0]  # the depth the last forward step reached
 
-    def first(new: DataFrame, k: int) -> DataFrame:
-        if k == 0:
-            firsts.append(new)
-        return new
-
     def forward(state: DataFrame, k: int) -> DataFrame:
         level[0] = k + 1
         cand = (
@@ -93,7 +85,7 @@ def _brandes(graph: Graph, sources: DataFrame | None, max_depth: int,
             .join(state.select("source", "id"), ["source", "id"], "left_anti")
             .withColumn("depth", F.lit(k + 1).cast("long"))
         )
-        return first(state.unionByName(cand).coalesce(parts), k)
+        return state.unionByName(cand).coalesce(parts)
 
     def reached(new: DataFrame, old: DataFrame):
         frontier = new.where(depth == level[0]).count()
@@ -134,7 +126,7 @@ def _brandes(graph: Graph, sources: DataFrame | None, max_depth: int,
             .select("source", "id", "depth", "sigma",
                     F.coalesce("contrib", F.lit(0.0)).alias("delta"))
         )
-        return first(state.unionByName(lvl).coalesce(parts), k)
+        return state.unionByName(lvl).coalesce(parts)
 
     dag = superstep.run(
         spark, "betweenness",
@@ -142,8 +134,8 @@ def _brandes(graph: Graph, sources: DataFrame | None, max_depth: int,
         backward, superstep.fixed_rounds, max(maxd - 1, 0),
     )
     out = result(edges, sigma, dag).localCheckpoint(eager=True)
-    for df in (sigma, dag, *firsts):
-        release(df, keep)
+    superstep.release(sigma)
+    superstep.release(dag)
     return out
 
 

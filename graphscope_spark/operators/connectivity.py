@@ -38,11 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import Graph
-from graphscope_spark.operators.traversal import (
-    HopFlood,
-    persisted_ids,
-    release,
-)
+from graphscope_spark.operators.traversal import HopFlood
+from graphscope_spark.plans import superstep
 
 
 def _not_empty(df: DataFrame) -> bool:
@@ -51,9 +48,10 @@ def _not_empty(df: DataFrame) -> bool:
 
 def scc(graph: Graph, max_outer: int = 1_000) -> DataFrame:
     """``(id long, scc long)`` — scc = min id of the vertex's strongly
-    connected component."""
+    connected component.  Each pivot flood's result is freed with
+    ``superstep.release`` once its SCCs are cut, and every round cut
+    once the result is: the result is the only block a call leaves."""
     spark = graph.vertices.sparkSession
-    keep = persisted_ids(spark)
     cuts: list[DataFrame] = []
 
     def cut(df: DataFrame) -> DataFrame:
@@ -141,11 +139,10 @@ def scc(graph: Graph, max_outer: int = 1_000) -> DataFrame:
             color.where(F.col("id") == F.col("color")).select("id"),
             symmetrize=False,
         )
-        before = persisted_ids(spark)
         reach = flood.run(flood.until_empty, sys.maxsize)
         found = cut(reach.join(color, "id")
                     .select("id", F.col("color").alias("scc")))
-        release(reach, before)
+        superstep.release(reach)
         flood.edges.unpersist()
         results.append(found)
 
@@ -169,5 +166,5 @@ def scc(graph: Graph, max_outer: int = 1_000) -> DataFrame:
         out = spark.createDataFrame([], "id long, scc long")
     # the result is materialized: no cut made on the way is read again
     for c in cuts:
-        release(c, keep)
+        superstep.release(c)
     return out

@@ -262,11 +262,7 @@ def k_center(graph: Graph, k: int = 3) -> DataFrame:
     an empty graph gives an empty frame.  k sequential
     :func:`~graphscope_spark.operators.traversal.bfs` floods, each
     folded into the running min."""
-    from graphscope_spark.operators.traversal import (
-        bfs,
-        persisted_ids,
-        release,
-    )
+    from graphscope_spark.operators.traversal import bfs
 
     if k < 1:
         raise ValueError(f"k_center needs k >= 1, got {k}")
@@ -285,7 +281,6 @@ def k_center(graph: Graph, k: int = 3) -> DataFrame:
     if not first:
         return dis
     center = int(first[0]["id"])
-    keep = persisted_ids(graph.vertices.sparkSession)
     for i in range(k):
         hop = bfs(graph, center, symmetrize=True)
         nxt = (
@@ -294,8 +289,9 @@ def k_center(graph: Graph, k: int = 3) -> DataFrame:
             .localCheckpoint(eager=True)
         )
         # the cut fold reads neither the flood nor the previous fold
-        release(hop, keep)
-        release(dis, keep)
+        superstep.release(hop)
+        if i > 0:  # the first fold read the vertices, not a cut
+            superstep.release(dis)
         dis = nxt
         if i + 1 < k:
             far = dis.orderBy(F.desc("dis"), F.desc("id")).limit(1).collect()

@@ -56,7 +56,6 @@ class HopFlood:
             self.spark.conf.get("spark.sql.shuffle.partitions"))
         self.roots = roots
         self.level = 0  # the depth the last step reached
-        self.first: DataFrame | None = None
 
     def init(self) -> DataFrame:
         return self.roots.select(F.col("id").cast("long"),
@@ -74,10 +73,7 @@ class HopFlood:
             .join(state.select("id"), "id", "left_anti")
             .withColumn("depth", F.lit(k + 1).cast("long"))
         )
-        new = state.unionByName(cand).coalesce(self.parts)
-        if k == 0:
-            self.first = new
-        return new
+        return state.unionByName(cand).coalesce(self.parts)
 
     def frontier(self, state: DataFrame) -> DataFrame:
         return state.where(F.col("depth") == self.level)
@@ -89,34 +85,11 @@ class HopFlood:
 
     def run(self, action, max_iter: int,
             checkpoint: CheckpointManager | None = None) -> DataFrame:
-        """The flood's last state.  The driver keeps the first step's
-        frame cached for a repeated call from the same roots; a flood
-        is run from many sources (``k_center``), so it is released."""
-        out = superstep.run(self.spark, "bfs", self.init, self.step, action,
-                            max_iter, checkpoint=checkpoint)
-        if self.first is not None:
-            self.first.unpersist()
-        return out
-
-
-def release(df: DataFrame, keep) -> None:
-    """Unpersist ``df`` and every lineage cut it reads whose RDD id is
-    not in ``keep`` (the ids persisted before the flood ran, from
-    ``getPersistentRDDs``): for a flood result that nothing reads
-    any more."""
-    if df.is_cached:  # an unpersist call scans every cached plan
-        df.unpersist()
-    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
-    while leaves.hasNext():
-        leaf = leaves.next()
-        if (leaf.getClass().getSimpleName() == "LogicalRDD"
-                and leaf.rdd().id() not in keep):
-            leaf.rdd().unpersist(False)
-
-
-def persisted_ids(spark) -> set:
-    """The ids of the RDDs persisted now."""
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+        """The flood's last state, a soft cut that holds the only
+        blocks the flood leaves; a caller that floods from many
+        sources (``k_center``) frees it with ``superstep.release``."""
+        return superstep.run(self.spark, "bfs", self.init, self.step,
+                             action, max_iter, checkpoint=checkpoint)
 
 
 def bfs(
@@ -332,9 +305,8 @@ def sssp_has_path(
         hit[0] = bool(row["hit"])
         return {"frontier": float(row["n"])}, hit[0] or row["n"] == 0
 
-    # a bool escapes, nothing lazy: release every frame the flood left
-    keep = persisted_ids(flood.spark)
-    release(flood.run(action, max_iter), keep)
+    # a bool escapes, nothing lazy: free the flood's result now
+    superstep.release(flood.run(action, max_iter))
     return hit[0]
 
 
@@ -346,16 +318,15 @@ def multi_source_sssp(
     symmetrize: bool = False,
     checkpoint: CheckpointManager | None = None,
     prebuilt_edges: DataFrame | None = None,
-    handles: dict | None = None,
 ) -> DataFrame:
     """Weighted distances from every source at once: ``(source long,
     id long, dist double)``, reached pairs only.
 
     ``prebuilt_edges`` lets a batching caller (``apsp_full_lengths``)
     build and persist the (src, dst, w) table ONCE instead of once
-    per call; ``handles`` (a dict) receives the final persisted
-    state frame under ``"frames"`` (and ``"edges"``) so that caller
-    can unpersist it after materializing the result.
+    per call.  The result is a projection of the soft cut
+    ``superstep.run`` ends on: a batching caller frees each batch's
+    with ``superstep.release`` once it has read it.
 
     One frontier-driven Bellman-Ford keyed on (source, id) — the
     backbone for APSP (``apps/apsp/all_pairs_shortest_path_length.h``,
@@ -380,9 +351,6 @@ def multi_source_sssp(
                           F.lit(0.0).alias("dist"))
     state = _bellman_ford(graph.vertices.sparkSession, "multi_source_sssp",
                           edges, init, ["source"], max_iter, checkpoint)
-    if handles is not None:
-        handles["frames"] = [state]
-        handles["edges"] = edges
     return state.select("source", "id", "dist")
 
 
@@ -475,34 +443,29 @@ def apsp_full_lengths(
         batch_count = max(1, _math.ceil(n / batch_size))
     # one shared persisted edge table for ALL batches (re-persisting
     # it per multi_source_sssp call leaked batch_count copies), and
-    # per-batch state frames released at every hard lineage cut —
+    # each batch's result released once a union cut has read it —
     # without this the block store grows with batch_count, the
     # opposite of what the memory knob promises
     shared_edges = _sssp_edge_table(graph, "__hop__", symmetrize).persist()
     out: DataFrame | None = None
-    pending_frames: list[DataFrame] = []
+    unread: list[DataFrame] = []  # what `out` reads until its next cut
     for b in range(batch_count):
         srcs = graph.vertices.select("id").where(
             F.pmod(F.col("id"), F.lit(batch_count)) == b
         )
-        h: dict = {}
         d = multi_source_sssp(
             graph, srcs, weight_col="__hop__", symmetrize=symmetrize,
-            prebuilt_edges=shared_edges, handles=h,
+            prebuilt_edges=shared_edges,
         ).select("source", "id", F.col("dist").cast("long").alias("dist"))
         out = d if out is None else out.unionByName(d)
-        pending_frames.extend(h.get("frames", []))
-        if batch_count > 1 and (b + 1) % 4 == 0:
+        unread.append(d)
+        if (b + 1) % 4 == 0 or b + 1 == batch_count:
+            # the last cut materializes the result, so every upstream
+            # frame, the shared edge table included, can go
             out = out.localCheckpoint(eager=True)
-            for f in pending_frames:
-                f.unpersist()
-            pending_frames = []
-    # final hard cut materializes the result (also on the single-batch
-    # path — previously that path skipped ALL cleanup), then every
-    # upstream frame including the shared edge table can be released
-    out = out.localCheckpoint(eager=True)
-    for f in pending_frames:
-        f.unpersist()
+            for f in unread:
+                superstep.release(f)
+            unread = [out]
     shared_edges.unpersist()
     return out
 

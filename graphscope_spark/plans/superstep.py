@@ -15,6 +15,15 @@ and :func:`run` owns the rest: the AQE scope, persisting each new state
 and releasing the frames behind the old one, the lineage-cut policy,
 ``CheckpointManager`` resume and commit, and the per-superstep stats.
 
+**Lifetime rule.**  :func:`run` frees every frame it makes.  Each call
+ends on one soft cut: the last state, ``localCheckpoint``-ed unless it
+already is the latest soft cut; the persisted state and the cut before
+it are then dropped.  So once a call returns, the cache manager holds
+nothing it made, and the block store holds only the RDD behind the
+returned frame.  Spark's ContextCleaner frees that RDD once the caller
+drops the frame; a caller that runs many floods frees it at once with
+:func:`release`, which also takes a projection of the frame.
+
 **Cut policy** (:class:`LineageCuts`).  Without cuts the analyzed plan
 of superstep ``k`` embeds all ``k`` earlier ones and analysis time
 dominates by round ~30.  Every ``CUT_EVERY``-th superstep is cut with
@@ -157,10 +166,13 @@ class LineageCuts:
         self.close()
 
 
-def _drop_cut(df: DataFrame) -> None:
-    """Unpersist the RDD a soft cut left in the block store (a hard
-    cut's files go with the scratch dir)."""
+def release(df: DataFrame) -> None:
+    """Unpersist the RDD a soft cut left in the block store, given the
+    cut or a projection of it (a hard cut's files go with the scratch
+    dir): for a frame :func:`run` returned, once nothing reads it."""
     plan = df._jdf.queryExecution().analyzed()
+    while plan.children().size() == 1:
+        plan = plan.children().head()
     if plan.getClass().getSimpleName() == "LogicalRDD":
         plan.rdd().unpersist(False)
 
@@ -194,7 +206,8 @@ def run(
     projection committed per superstep (default: every column).
     ``stats`` receives ``rounds`` and the last superstep's metrics.
     ``every`` is the soft-cut cadence; an operator passes its own only
-    with the measurement that needs it."""
+    with the measurement that needs it.  The returned frame is a soft
+    cut and the only thing the call leaves held (module docstring)."""
     with aqe_scope(spark, op), LineageCuts(spark, op, every) as cuts:
         latest = None if checkpoint is None else checkpoint.latest_superstep()
         if latest is None:
@@ -211,20 +224,13 @@ def run(
         state = state.persist(_LEVEL) if last_cut is None else last_cut
         for k in range(start, max_iter):
             t0 = time.time()
-            new = step(state, k)
-            if k == 0 and last_cut is None:
-                # a fresh run's first superstep reads only the inputs:
-                # left cached, a repeated call on the same graph finds it
-                # and skips recomputing it (one job per call in a
-                # benchmark rotation)
-                new = new.persist(_LEVEL)
-            new = cuts.maybe(new, k, persist=True)
+            new = cuts.maybe(step(state, k), k, persist=True)
             metrics, stop = action(new, state)
             state.unpersist()
             if cuts.due(k):
                 # nothing computed after this cut reads the one before
                 if last_cut is not None:
-                    _drop_cut(last_cut)
+                    release(last_cut)
                 last_cut = new
             state = new
             metrics = {**metrics, "wall_ms": (time.time() - t0) * 1000.0}
@@ -235,8 +241,12 @@ def run(
                 stats.update(metrics, rounds=k + 1)
             if stop:
                 break
-        if cuts.last_hard:  # the state still reads the scratch dir
+        if state is not last_cut or cuts.last_hard:
+            # end on one soft cut: nothing else the call made stays
+            # held, and the result outlives the scratch dir
             kept = state.localCheckpoint(eager=True)
             state.unpersist()
+            if last_cut is not None:
+                release(last_cut)
             state = kept
         return state

@@ -5,10 +5,12 @@ from __future__ import annotations
 
 import random
 
+import duckdb
 import networkx as nx
 import pytest
 from pyspark.sql import functions as F
 
+from graphscope_spark import entry as E
 from graphscope_spark.graph import Graph
 from graphscope_spark.operators.bcc import (
     articulation_points,
@@ -16,6 +18,7 @@ from graphscope_spark.operators.bcc import (
     bridges,
 )
 from graphscope_spark.operators.msf import minimum_spanning_forest
+from tools.oracle_compare import compare
 
 
 def _graph(spark, edges, nodes):
@@ -55,6 +58,38 @@ def test_bridges_and_cut_points_match_networkx(spark, name, G):
         for comp in nx.biconnected_component_edges(G)
     }
     assert {frozenset(b) for b in got_blocks.values()} == exp_blocks
+
+
+def test_bridge_oracles_compare_non_empty_rows(spark, tmp_path):
+    """The ``bridges`` and ``cut_points`` registry entries against
+    their DuckDB oracles on a co-order graph that has both: two
+    4-cliques joined by the path 4-5-6-7, every pair co-ordered in two
+    orders, plus one pair (1, 10) co-ordered once, which the
+    two-order threshold of ``part_graph_min2`` drops."""
+    pairs = ([(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+             + [(a, b) for a in range(7, 11) for b in range(a + 1, 11)]
+             + [(4, 5), (5, 6), (6, 7)])
+    orders = [p for p in pairs for _ in range(2)] + [(1, 10)]
+    rows = [(o, part) for o, p in enumerate(orders) for part in p]
+    spark.createDataFrame(rows, "l_orderkey long, l_partkey long") \
+        .write.parquet(str(tmp_path / "lineitem.parquet"))
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW lineitem AS SELECT * FROM "
+            f"'{tmp_path}/lineitem.parquet/*.parquet'")
+    try:
+        verdicts = {n: compare(spark, con, n, str(tmp_path))
+                    for n in ("bridges", "cut_points")}
+        # the verdict holds Spark equal to the oracle, so the oracle's
+        # rows stand for both sides
+        cut = {r[0] for r in con.sql(
+            f"SELECT id FROM ({E.oracle_sql()['cut_points']}) WHERE is_cut = 1"
+        ).fetchall()}
+    finally:
+        con.close()
+    for v in verdicts.values():
+        assert v.ok, v.report()
+    assert verdicts["bridges"].oracle_rows == 3
+    assert cut == {4, 5, 6, 7}
 
 
 def test_msf_matches_kruskal_total_order(spark):
